@@ -162,177 +162,6 @@ def minhash_signatures(
     return lanes.groupBy(id_col).agg(*aggs)
 
 
-def _minhash_docs_kernel(num_hashes: int, shingle_n: int, id_col: str):
-    """mapInArrow kernel: (id, text) record batches -> (id, h0..h{k-1}).
-
-    Everything happens as offset math over the batch's Arrow buffers:
-
-    - ``split(text, ' ')`` token boundaries are the 0x20 byte positions
-      (0x20 never occurs inside a multi-byte UTF-8 sequence, and a literal
-      single-space split keeps empty tokens on both engines), so token
-      starts/ends are integer arrays derived from one ``flatnonzero``.
-    - a shingle of ``shingle_n`` consecutive tokens re-joined with ' ' is
-      EXACTLY the original byte span [start of token i, end of token
-      i+n-1] — empty tokens from repeated spaces reproduce those spaces —
-      so shingles are (start, end) pairs, never materialized strings.
-    - md5 lanes come from the vectorized kernel
-      (functions/md5np.md5_lanes_spans — bit-identical to the JVM md5 by
-      definition of the algorithm; lane extraction mirrors
-      portable_hash64_lane).
-    - the per-doc min IS final here: each (id, text) row lives in exactly
-      one batch, and rows of a doc's shingles are consecutive, so one
-      ``np.minimum.reduceat`` per lane replaces the whole groupBy — the
-      signature table leaves the kernel finished.
-
-    Docs whose token count < shingle_n (incl. empty/NULL text) emit no
-    row, exactly like the explode pipeline. Shingle processing is sliced
-    at doc granularity (``_MINHASH_SLICE_SHINGLES``) so a batch of
-    100k-token documents bounds its working set; md5_lanes_spans bounds
-    the padded-buffer memory internally.
-    """
-    import numpy as np
-
-    from slr207_mapreduce_spark.functions.md5np import (
-        md5_lanes_spans,
-        md5_lanes_spans_multi,
-    )
-
-    npairs = (num_hashes + 1) // 2
-    prefixes = [f"s{p}|".encode() for p in range(npairs)]
-    # same-length prefixes share one padded buffer per chunk (s0..s9 do);
-    # fall back to per-prefix building beyond 10 pairs
-    same_len = len({len(p) for p in prefixes}) == 1
-    names = [id_col] + [f"h{s}" for s in range(num_hashes)]
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            txt = batch.column(1)
-            if txt.null_count:
-                txt = txt.fill_null("")
-            off_dtype = np.int64 if pa.types.is_large_string(txt.type) else np.int32
-            bufs = txt.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                txt.offset : txt.offset + n + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] else np.zeros(
-                0, dtype=np.uint8
-            )
-            # token boundaries for ALL docs of the batch in one pass
-            sp_all = (
-                offsets[0]
-                + np.flatnonzero(data[offsets[0] : offsets[-1]] == 0x20).astype(
-                    np.int64
-                )
-            )
-            n_spaces = np.searchsorted(sp_all, offsets).astype(np.int64)
-            nt = (n_spaces[1:] - n_spaces[:-1]) + 1  # tokens per doc
-            ns = np.maximum(nt - (shingle_n - 1), 0)  # shingles per doc
-            keep = np.flatnonzero(ns > 0)
-            if len(keep) == 0:
-                continue
-            total_tokens = int(nt.sum())
-            first_tok = np.zeros(n, dtype=np.int64)
-            np.cumsum(nt[:-1], out=first_tok[1:])
-            is_first = np.zeros(total_tokens, dtype=bool)
-            is_first[first_tok] = True
-            is_last = np.zeros(total_tokens, dtype=bool)
-            is_last[first_tok + nt - 1] = True
-            ts = np.empty(total_tokens, dtype=np.int64)  # token start (abs)
-            ts[is_first] = offsets[:-1]
-            ts[~is_first] = sp_all + 1
-            te = np.empty(total_tokens, dtype=np.int64)  # token end (abs)
-            te[is_last] = offsets[1:]
-            te[~is_last] = sp_all
-            first_sh = np.zeros(n, dtype=np.int64)
-            np.cumsum(ns[:-1], out=first_sh[1:])
-            # doc-granular slices: bound the per-slice shingle count
-            lo = 0
-            while lo < len(keep):
-                hi = lo + 1
-                budget = int(ns[keep[lo]])
-                while hi < len(keep) and budget + ns[keep[hi]] <= _MINHASH_SLICE_SHINGLES:
-                    budget += int(ns[keep[hi]])
-                    hi += 1
-                docs_sel = keep[lo:hi]
-                ns_sel = ns[docs_sel]
-                total_sh = int(ns_sel.sum())
-                rel_first = np.zeros(len(docs_sel), dtype=np.int64)
-                np.cumsum(ns_sel[:-1], out=rel_first[1:])
-                k_within = np.arange(total_sh, dtype=np.int64) - np.repeat(
-                    rel_first, ns_sel
-                )
-                tok_base = np.repeat(first_tok[docs_sel], ns_sel)
-                sh_start = ts[tok_base + k_within]
-                sh_end = te[tok_base + k_within + (shingle_n - 1)]
-                cols = [ids[docs_sel]]
-                lanes: list[np.ndarray] = []
-                if same_len:
-                    for l0, l1 in md5_lanes_spans_multi(
-                        data, sh_start, sh_end, prefixes
-                    ):
-                        lanes.append(l0)
-                        lanes.append(l1)
-                else:
-                    for prefix in prefixes:
-                        l0, l1 = md5_lanes_spans(data, sh_start, sh_end, prefix)
-                        lanes.append(l0)
-                        lanes.append(l1)
-                for s in range(num_hashes):
-                    cols.append(np.minimum.reduceat(lanes[s], rel_first))
-                yield pa.record_batch(
-                    [pa.array(c, type=pa.int64()) for c in cols], names=names
-                )
-                lo = hi
-
-    return kernel
-
-
-# Upper bound on shingles processed per kernel slice (~2M shingles keeps
-# the transient lane/index arrays in the low hundreds of MB even for
-# 100k-token documents; one doc always forms at least one slice).
-_MINHASH_SLICE_SHINGLES = 1 << 21
-
-
-def minhash_signatures_docs(
-    docs: DataFrame,
-    num_hashes: int = 6,
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signatures straight from (id, text) rows — ONE
-    Arrow-batched kernel pass (guide §4.2), replacing split + shingle
-    explode + ceil(k/2) md5 expressions + conv/substring + groupBy-min.
-
-    **Measured prototype, not the wired path** (r16). Bit-identical to
-    ``minhash_signatures(doc_shingles(docs, id_col, n, distinct=False))``
-    — same shingle set (multiset; min is insensitive to the dropped
-    distinct), same md5 bits, same lane extraction, same min — pinned by
-    tests/test_minhash_kernel.py over the edge corpus (empty/NULL text,
-    repeated spaces, unicode, >200-byte tokens). Interleaved-A/B it
-    LOSES to the JVM expression pipeline at sf0.1 (1.5x on the
-    standalone signature query) and ties at sf1 — JVM codegen md5
-    matches the vectorized numpy throughput, so the Python boundary is
-    pure overhead at bench scales; its one measured win is the
-    100k-token longdoc tier (0.92x), where the shingle explode is
-    heaviest. Kept (with its tests) as the ready-made candidate for a
-    long-document-heavy deployment; the wired path stays JVM-side. Full
-    table in OPTIMIZATION_r16.md.
-    """
-    from slr207_mapreduce_spark.operators.skew import parallelize_narrow_scan
-
-    docs = parallelize_narrow_scan(docs, by=id_col)
-    schema = f"{id_col} long, " + ", ".join(f"h{s} long" for s in range(num_hashes))
-    return docs.select(id_col, "text").mapInArrow(
-        _minhash_docs_kernel(num_hashes, shingle_n, id_col), schema=schema
-    )
-
-
 def lsh_bands(
     sigs: DataFrame,
     num_hashes: int = 6,
@@ -373,16 +202,8 @@ def minhash_lsh_candidates(
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b. est_jaccard =
     fraction of agreeing minhashes — the unbiased Jaccard estimator.
     """
-    # Signature pass: the JVM expression pipeline. The r16 Arrow kernel
-    # prototype (minhash_signatures_docs — bit-identical, pinned by
-    # tests/test_minhash_kernel.py) measured interleaved-A/B SLOWER at
-    # sf0.1 (1.05-1.07x on this query, 1.5x on the standalone signature
-    # query) and parity at sf1, winning only on the 100k-token longdoc
-    # tier (0.92x): JVM codegen md5 does ~2.4M digests/s/core here, on
-    # par with the vectorized numpy kernel, so the Python boundary only
-    # adds cost at bench scales. Closed per r15 VERDICT item 1's
-    # "prototype loses to JVM codegen md5" clause; measurements in
-    # OPTIMIZATION_r16.md.
+    # An Arrow MinHash kernel lost its A/B to this JVM path and was deleted
+    # (OPTIMIZATION_r16.md §1; recoverable from commit d623161).
     sigs = minhash_signatures(
         doc_shingles(docs, id_col, shingle_n, distinct=False), num_hashes, id_col
     )

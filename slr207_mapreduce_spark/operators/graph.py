@@ -72,11 +72,16 @@ def _pin_partitioned(df: DataFrame, key: str) -> DataFrame:
     line up with it. Blocks evicted under memory pressure are recomputed
     from lineage (persist keeps it) — strictly safer than localCheckpoint,
     whose evicted blocks are unrecoverable. Callers unpersist in their
-    ``finally``; the materializing count() keeps eager semantics."""
+    ``finally``; the materializing count() keeps eager semantics, and a
+    failing count() unpersists before it raises."""
     spark = df.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pinned = df.repartition(p, key).persist()
-    pinned.count()
+    try:
+        pinned.count()
+    except BaseException:
+        pinned.unpersist(blocking=False)
+        raise
     return pinned
 
 
@@ -102,6 +107,28 @@ def release_result(df: DataFrame) -> None:
     (the result may be a projection over the checkpointed frame).
     """
     _release_ids(df.sparkSession.sparkContext, result_checkpoint_ids(df))
+
+
+def _label_sum(df: DataFrame) -> int:
+    """Exact decimal sum of ``df.label`` — connected_components' convergence
+    probe."""
+    total = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    s = df.agg(total).collect()[0]["s"]
+    if s is None:
+        # null sum = empty frame (trivially converged, return 0) OR a
+        # >10^38 decimal overflow, which non-ANSI Spark also reports as
+        # null — indistinguishable by value, and two consecutive
+        # overflow-nulls would read as a false fixed point. Unreachable
+        # with int64 labels (max possible sum ~2^126 < 10^38 needs more
+        # distinct nodes than int64 holds), but fail loudly rather than
+        # mis-cluster if a future label type changes that.
+        if not df.isEmpty():
+            raise ArithmeticError(
+                "label-sum overflowed decimal(38,0) — convergence "
+                "detection would be unsound; shrink label magnitudes"
+            )
+        return 0
+    return int(s)
 
 
 def connected_components(
@@ -145,35 +172,15 @@ def connected_components(
         .distinct(),
         "a",
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    def _label_sum(df) -> int:
-        s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[
-            0
-        ]["s"]
-        if s is None:
-            # null sum = empty frame (trivially converged, return 0) OR a
-            # >10^38 decimal overflow, which non-ANSI Spark also reports as
-            # null — indistinguishable by value, and two consecutive
-            # overflow-nulls would read as a false fixed point. Unreachable
-            # with int64 labels (max possible sum ~2^126 < 10^38 needs more
-            # distinct nodes than int64 holds), but fail loudly rather than
-            # mis-cluster if a future label type changes that.
-            if not df.isEmpty():
-                raise ArithmeticError(
-                    "label-sum overflowed decimal(38,0) — convergence "
-                    "detection would be unsound; shrink label magnitudes"
-                )
-            return 0
-        return int(s)
-
-    prev_sum = _label_sum(labels)
     prev_ids: set[int] = set()
     converged = False
     try:
+        labels = (
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
+        )
+        prev_sum = _label_sum(labels)
         for round_idx in range(1, max_iter + 1):
             neighbor_min = (
                 sym.join(labels, sym.a == labels.node)
@@ -262,22 +269,23 @@ def pagerank_fp(
     # the checkpointed (UnknownPartitioning) form re-exchanged the FULL
     # edge table every round; now only the round's rank frame and the
     # map-side-combined contribution sums move.
-    nodes = _pin_partitioned(
-        sym.select(F.col("src").alias("node"))
-        .union(sym.select(F.col("dst").alias("node")))
-        .distinct(),
-        "node",
-    )
-    n = nodes.count()
-    deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
-    graph = _pin_partitioned(sym.join(deg, "src"), "src")
-    sym.unpersist(blocking=False)  # only the builds above read it
-
     sc = edges.sparkSession.sparkContext
-    teleport = (15 * base) // (100 * n)
-    ranks = nodes.withColumn("rank_fp", F.lit(base // n).cast("long"))
+    nodes = graph = None
     prev_ids: set[int] = set()
     try:
+        nodes = _pin_partitioned(
+            sym.select(F.col("src").alias("node"))
+            .union(sym.select(F.col("dst").alias("node")))
+            .distinct(),
+            "node",
+        )
+        n = nodes.count()
+        deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
+        graph = _pin_partitioned(sym.join(deg, "src"), "src")
+        sym.unpersist(blocking=False)  # only the builds above read it
+
+        teleport = (15 * base) // (100 * n)
+        ranks = nodes.withColumn("rank_fp", F.lit(base // n).cast("long"))
         for _ in range(iters):
             contrib = (
                 graph.join(ranks, graph.src == ranks.node)
@@ -307,11 +315,13 @@ def pagerank_fp(
         _release_ids(sc, prev_ids)
         raise
     finally:
-        # final ranks are checkpointed → they no longer read nodes/graph
+        # final ranks are checkpointed → they no longer read sym/nodes/graph
         # blocks; only the result frame itself stays pinned (callers may
-        # free it after their terminal action via release_result)
-        nodes.unpersist(blocking=False)
-        graph.unpersist(blocking=False)
+        # free it after their terminal action via release_result). sym's
+        # second unpersist is a no-op unless setup failed before the first.
+        for pinned in (sym, nodes, graph):
+            if pinned is not None:
+                pinned.unpersist(blocking=False)
     return ranks
 
 
@@ -398,14 +408,15 @@ def bfs_distances(
         .distinct(),
         "a",
     )
-    settled, settled_ids = _ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-    )
-    frontier = settled
+    settled_ids: set[int] = set()
     frontier_ids: set[int] = set()
     try:
+        settled, settled_ids = _ckpt(
+            seeds.select(F.col(node).alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("int"))
+        )
+        frontier = settled
         for h in range(1, max_hops + 1):
             reached = (
                 sym.join(frontier, sym.a == frontier.node)

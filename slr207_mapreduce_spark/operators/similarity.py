@@ -44,10 +44,6 @@ def dot_f64_expr(a: str, b: str) -> str:
     )
 
 
-def norm_f64_expr(a: str) -> str:
-    return f"sqrt({dot_f64_expr(a, a)})"
-
-
 def norm_f64(a: Column) -> Column:
     return F.sqrt(dot_f64(a, a))
 
@@ -267,16 +263,8 @@ def _table_dims(table: int, bits: int, dim: int) -> list[int]:
     return [(table * bits + j) % dim for j in range(bits)]
 
 
-def signbit_bucket_dims(vec_col: Column, dims: list[int]) -> Column:
-    """Bucket key from the sign bits of the given dimensions."""
-    term = None
-    for j, d in enumerate(dims):
-        t = F.when(F.element_at(vec_col, d + 1) > 0, F.lit(1 << j)).otherwise(0)
-        term = t if term is None else term + t
-    return term.cast("long")
-
-
 def signbit_bucket_dims_sql(vec_expr: str, dims: list[int]) -> str:
+    """Bucket key from the sign bits of the given dimensions."""
     terms = " + ".join(
         f"CASE WHEN {vec_expr}[{d + 1}] > 0 THEN {1 << j} ELSE 0 END"
         for j, d in enumerate(dims)

@@ -179,15 +179,6 @@ def _proj_sql(k: int) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def _proj_spark(k: int) -> str:
-    # element_at is 1-based like DuckDB's list indexing
-    terms = [
-        f"({_sign(j, k)})*CAST(FLOOR(element_at(embedding, {j + 1})*1000000D) AS BIGINT)"
-        for j in range(_EMB_DIM)
-    ]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
 @register(
     "embedding_random_projection",
     oracle="SELECT vec_id, label, "

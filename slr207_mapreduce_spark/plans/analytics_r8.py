@@ -16,8 +16,10 @@ from pyspark.sql import functions as F
 from slr207_mapreduce_spark.plans.analytics_r6 import _SEMDEDUP_TAU
 from slr207_mapreduce_spark.plans.base import REGISTRY, register
 
-# Importing similarity_queries executes its registrations, so this module
-# can share knn_ivf_pq's oracle and query-set constants verbatim.
+# Importing similarity_queries and text_analysis executes their
+# registrations, so this module can share knn_ivf_pq's oracle, text_bm25's
+# oracle and the query-set constants verbatim.
+from slr207_mapreduce_spark.plans import text_analysis  # noqa: F401
 from slr207_mapreduce_spark.plans.similarity_queries import _N_QUERIES, KNN_K
 from slr207_mapreduce_spark.sources.tables import load_table
 

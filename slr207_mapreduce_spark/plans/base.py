@@ -119,10 +119,10 @@ WINDOW_ROUND: int = 16
 # metadata doc-count probe in dedup_ngram_jaccard's auto plan selector).
 # Each is oracle-verified locally at sf0.01 AND sf0.1 (tools/check.py,
 # exact values); this list routes them through the driver's own hash gate
-# as well. Drained (reset to empty) once adjudicated. The r16 Arrow
-# MinHash kernel was A/B-measured and NOT wired (OPTIMIZATION_r16.md), so
-# the minhash consumers keep their adjudicated implementation and take no
-# slot here.
+# as well. Drained (reset to empty) once adjudicated. The minhash
+# consumers keep their adjudicated implementation: the r16 Arrow MinHash
+# kernel lost its A/B and was deleted (OPTIMIZATION_r16.md §1; recoverable
+# from commit d623161).
 REWRITTEN_PRIORITY_NAMES: tuple[str, ...] = (
     "dedup_cdc_chunks",
     "knn_lsh_bucketed",
@@ -219,50 +219,14 @@ def all_queries() -> dict[str, QuerySpec]:
     :data:`DRIVER_SAMPLE_FIRST` before the registration-order remainder."""
     # Imports are deferred so plan modules can use the registry decorator
     # without circular imports.
-    from slr207_mapreduce_spark.plans import (  # noqa: F401
-        parity_queries,
-        tpch,
-        joins,
-        aggregates,
-        windows,
-        setops,
-        scalars,
-        events,
-        text_analysis,
-        dedup_queries,
-        similarity_queries,
-        multimodal_queries,
-        subqueries,
-        pipeline_queries,
-        tpch_extra,
-        tpch_full,
-        udf_queries,
-        udtf_queries,
-        asof_queries,
-        graph_queries,
-        relational_extra,
-        scalars_extra,
-        events_extra,
-        agg_r2,
-        events_r2,
-        scalars_r2,
-        text_r2,
-        pipeline_r2,
-        warehouse_r2,
-        analytics_r2,
-        pipeline_r3,
-        pipeline_r4,
-        pipeline_r4b,
-        analytics_r4,
-        analytics_r4c,
-        analytics_r4d,
-        recall_report,
-        estimator_report,
-        analytics_r5,
-        analytics_r6,
-        analytics_r7,
-        analytics_r8,
-    )
+    import importlib
+    import pkgutil
+
+    from slr207_mapreduce_spark import plans
+
+    for mod in pkgutil.iter_modules(plans.__path__):
+        if mod.name != "base":
+            importlib.import_module(f"{plans.__name__}.{mod.name}")
 
     ordered: dict[str, QuerySpec] = {}
     for name in DRIVER_SAMPLE_FIRST:

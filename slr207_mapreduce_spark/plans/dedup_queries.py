@@ -88,8 +88,8 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     # distinct=False: min over the shingle multiset == min over the set,
     # so the dedup shuffle is skipped (result identical, oracle unchanged).
-    # The r16 Arrow kernel prototype (minhash_signatures_docs) measured
-    # slower here — see minhash_lsh_candidates' note + OPTIMIZATION_r16.md.
+    # An Arrow MinHash kernel lost its A/B here and was deleted
+    # (OPTIMIZATION_r16.md §1; recoverable from commit d623161).
     return minhash_signatures(doc_shingles(d, "doc_id", 3, distinct=False), num_hashes=6)
 
 

@@ -83,10 +83,10 @@ SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.files.openCostInBytes": "524288",
     "spark.sql.parquet.filterPushdown": "true",
     # spark.sql.shuffle.partitions is ENV-DEPENDENT and therefore resolved
-    # per call in get_session()/harden_session() via
-    # _default_shuffle_partitions() — baking it into this literal froze the
-    # env at import time, silently ignoring SPARK_GRAFT_SHUFFLE_PARTITIONS /
-    # SPARK_GRAFT_CPUS set afterwards (r15 ADVICE item 4).
+    # per call in get_session() via _default_shuffle_partitions() —
+    # baking it into this literal froze the env at import time, silently
+    # ignoring SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_CPUS set
+    # afterwards (r15 ADVICE item 4).
     "spark.sql.parquet.compression.codec": "zstd",
     # local[N] runs driver and executors in ONE JVM whose heap defaults to
     # 1g — on a 32-core/128 GiB box that heap is what OOMed the sf1
@@ -137,22 +137,3 @@ def get_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def harden_session(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable subset of our defaults to an externally
-    created session (e.g. the driver's). Static configs (shuffle service,
-    memory) can't change post-start and are left alone."""
-    for key in (
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.shuffle.partitions",
-    ):
-        try:
-            spark.conf.set(key, SCALE_DEFAULTS[key])
-        except Exception:
-            pass  # read-only in this deployment; keep going
-    return spark

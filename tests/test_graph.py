@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -324,3 +325,76 @@ def test_connected_components_rounds_flat_under_replication(spark):
 
     r1, r8 = rounds_for(1), rounds_for(8)
     assert r1 == r8, f"round count grew with replication: {r1} -> {r8}"
+
+
+def _raise_on_call(real, fail_at: int):
+    """Wrap ``real`` so its ``fail_at``-th call (1-based) raises."""
+    calls = []
+
+    def wrapped(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == fail_at:
+            raise ArithmeticError("injected setup failure")
+        return real(*args, **kwargs)
+
+    return wrapped
+
+
+def _assert_setup_failure_releases_pins(spark, run):
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(ArithmeticError, match="injected setup failure"):
+        run()
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_pagerank_setup_failure_releases_pins(spark, monkeypatch):
+    """A failure after sym and nodes are pinned (here: the graph pin)
+    must unpersist both."""
+    from slr207_mapreduce_spark.operators import graph
+
+    monkeypatch.setattr(
+        graph, "_pin_partitioned", _raise_on_call(graph._pin_partitioned, 2)
+    )
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    _assert_setup_failure_releases_pins(spark, lambda: graph.pagerank_fp(edges))
+
+
+def test_connected_components_setup_failure_releases_pins(spark, monkeypatch):
+    """The first label sum (which raises ArithmeticError on overflow) runs
+    after sym is pinned; its failure must unpersist sym."""
+    from slr207_mapreduce_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_label_sum", _raise_on_call(graph._label_sum, 1))
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    _assert_setup_failure_releases_pins(
+        spark, lambda: graph.connected_components(edges)
+    )
+
+
+def test_bfs_setup_failure_releases_pins(spark, monkeypatch):
+    """The seed checkpoint runs after sym is pinned; its failure must
+    unpersist sym."""
+    from slr207_mapreduce_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_ckpt", _raise_on_call(graph._ckpt, 1))
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    seeds = spark.createDataFrame([(1,)], "node long")
+    _assert_setup_failure_releases_pins(
+        spark, lambda: graph.bfs_distances(edges, seeds)
+    )
+
+
+def test_pin_failure_releases_its_own_pin(spark):
+    """A pin whose materializing count() fails leaves no cache entry."""
+    from slr207_mapreduce_spark.operators.graph import _pin_partitioned
+
+    df = spark.range(4).select(
+        F.col("id").alias("a"),
+        F.raise_error(F.lit("injected setup failure")).cast("long").alias("b"),
+    )
+    with pytest.raises(Exception, match="injected setup failure"):
+        _pin_partitioned(df, "a")
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.lookupCachedData(df.repartition(p, "a")._jdf).isDefined()

@@ -142,13 +142,22 @@ def test_foreach_batch_sink(spark, tmp_path):
     assert total == 60
 
 
-def test_textsplits_python_datasource_matches_read_text(spark):
-    """The custom Python DataSource reads the reference's split fixtures
-    with identical content to spark.read.text, plus provenance columns;
-    one input partition per split file (the reference's distribution unit)."""
+def test_textsplits_python_datasource_matches_read_text(spark, tmp_path):
+    """The custom Python DataSource reads reference-style split files with
+    identical content to spark.read.text, plus provenance columns; one
+    input partition per split file (the reference's distribution unit)."""
     from slr207_mapreduce_spark.sources import split_source
 
-    split_dir = "/root/reference/little_splits"
+    split_dir = str(tmp_path / "splits")
+    os.makedirs(split_dir)
+    splits = {
+        "split0.txt": "Deer Beer River\nCar Car River\n",
+        "split1.txt": "Deer Car Bear\n\nthé  café\n",  # empty line, 2 spaces
+        "split2.txt": "Bear River\nlast line, no newline",
+    }
+    for name, body in splits.items():
+        with open(os.path.join(split_dir, name), "w", encoding="utf-8") as f:
+            f.write(body)
     split_source.register(spark)
     df = spark.read.format("textsplits").option("path", split_dir).load()
     rows = df.collect()

@@ -11,8 +11,6 @@ Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.1]
 from __future__ import annotations
 
 import argparse
-import ast
-import hashlib
 import os
 import re
 import sys
@@ -30,61 +28,14 @@ query) is additionally swept for plan anti-patterns as a regression test
 UDF outside the two deliberate UDF-surface queries, no
 BroadcastNestedLoopJoin outside the bounded-side allowlist, no mid-plan
 global sort without a limit, no SortMergeJoin with a region/nation-only
-side, per-table scan budgets.
+side, per-table scan budgets. tests/test_plans.py rebuilds this table in
+plan-only mode and fails when any row differs.
 """
 
-
-def canonical_source(src: str) -> bytes:
-    """Canonicalize one Python source file for fingerprinting: parse to an
-    AST, strip docstrings, and dump without position attributes. Comments
-    and whitespace vanish in the parse; docstrings are removed explicitly.
-    A file that fails to parse falls back to its raw bytes (still hashed,
-    never skipped). Added in r13 (VERDICT r12 finding 1): the raw-bytes
-    fingerprint flipped on a docstring-only edit, reddening the tree.
-
-    Caveat: ast.dump text is Python-minor-version-dependent, so the
-    committed fingerprint is only comparable when --write and the test
-    run under the same interpreter — true in this repo's pinned
-    environment; a version bump just means one regeneration."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return src.encode()
-    for node in ast.walk(tree):
-        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
-            body = node.body
-            if (
-                body
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                node.body = body[1:] or [ast.Pass()]
-    return ast.dump(tree).encode()
-
-
-def inputs_fingerprint() -> str:
-    """Hash over everything a physical plan can depend on: the whole
-    package, the bench query list, and this auditor — each file
-    canonicalized by canonical_source() so docstring/comment-only edits
-    cannot flip the fingerprint (they can't change a plan). Committed as
-    PLANS.md's footer; tests/test_plans.py fails when the footer is stale,
-    forcing `python tools/plan_audit.py --write` after plan-code changes
-    (r06 VERDICT item 8 — regeneration was a by-hand convention)."""
-    h = hashlib.sha256()
-    files = ["bench.py", os.path.join("tools", "plan_audit.py")]
-    pkg = os.path.join(REPO, "slr207_mapreduce_spark")
-    for root, _dirs, names in os.walk(pkg):
-        for n in names:
-            if n.endswith(".py"):
-                files.append(os.path.relpath(os.path.join(root, n), REPO))
-    for rel in sorted(files):
-        h.update(rel.encode())
-        # errors="replace": a non-UTF8 byte must degrade to the raw-bytes
-        # fallback path, never crash the fingerprint (r13 review)
-        with open(os.path.join(REPO, rel), "r", encoding="utf-8", errors="replace") as f:
-            h.update(canonical_source(f.read()))
-    return h.hexdigest()[:32]
+TABLE_HEAD = (
+    "| query | shuffles | broadcasts | scans | pushdown | read cols | TakeOrdered | PyUDF | AQE |\n"
+    "|---|---|---|---|---|---|---|---|---|"
+)
 
 
 def audit(df) -> dict:
@@ -107,84 +58,102 @@ def audit(df) -> dict:
     }
 
 
+# Round-2 flagship operators audited alongside the bench set.
+AUDIT_EXTRA = [
+    "knn_pq_adc",
+    "knn_ivf",
+    "dedup_semantic_clusters",
+    "pipeline_repetition_filter",
+    "events_session_window_batch",
+    "text_profile_by_source",
+    "cdc_latest_state",
+    "warehouse_incremental_agg_merge",
+    "graph_triangle_count",
+    "text_keyword_tfidf_topk",
+    "events_promo_overlap_join",
+    "pipeline_chunk_documents",
+    "pipeline_global_shuffle",
+    # Round-4 batch 2/3 operators.
+    "pipeline_bloom_membership",
+    "dedup_cdc_chunks",
+    "text_lm_score",
+    "text_trigram_novelty",
+    "embedding_outlier_by_label",
+    "text_bpe_apply",
+    "pipeline_quality_percentile_by_source",
+    # Round-4 batch 4/5 operators.
+    "agg_histogram_equiwidth",
+    "scalar_zorder_key",
+    "pipeline_sample_exact_k",
+    "stats_column_profile",
+    "pipeline_integrity_audit",
+    "embedding_random_projection",
+    "agg_histogram_equidepth",
+    "events_overlap_join_bucketed",
+    "pipeline_weighted_sample",
+    "pipeline_json_ingest_quarantine",
+    "pipeline_csv_ingest_quarantine",
+    "text_oov_rate",
+    "stats_profile_drift",
+    "knn_jl_rerank",
+    # Round-6 operators.
+    "multimodal_png_roundtrip",
+    "multimodal_gif_roundtrip",
+    "events_sessionization_capped",
+    "events_sessionization_capped_segmented",
+    "knn_quantized_int8",
+    "warehouse_snapshot_diff",
+    "graph_bfs_distances",
+    "dedup_streaming_gate_batch",
+    "events_funnel_stages",
+    "stats_robust",
+    "graph_degree_hubs",
+    "text_bm25",
+    "knn_lsh_bucketed",
+    # Round-13/14 operators (the *_materialized one audits its from-raw
+    # twin under plan_only()).
+    "knn_ivf_pq",
+    "knn_graph_ivf",
+    "dedup_semantic_knn_graph_mutual",
+    "dedup_semantic_semdedup_merged",
+    "knn_ivf_pq_materialized",
+    "pipeline_incremental_semantic_dedup",
+    "retrieval_hybrid_rrf",
+]
+
+
+def audit_rows(spark, sf: str) -> list[str]:
+    """PLANS.md table rows (one per audited query) built in plan-only mode:
+    the *_materialized queries audit their from-raw twin (same oracle) and
+    pay no store write."""
+    from bench import BENCH_QUERIES
+    from slr207_mapreduce_spark.plans.base import all_queries, plan_only
+
+    specs = all_queries()
+    rows = []
+    for name in BENCH_QUERIES + AUDIT_EXTRA:
+        with plan_only():
+            a = audit(specs[name].build(spark, sf))
+        rows.append(
+            f"| {name} | {a['shuffles']} | {a['broadcasts']} | {a['scans']} | "
+            f"{'yes' if a['pushed_any'] else '—'} | {a['read_cols']} | "
+            f"{'yes' if a['take_ordered'] else '—'} | "
+            f"{'LEAKED' if a['python_udf'] else 'none'} | "
+            f"{'on' if a['aqe'] else 'OFF'} |"
+        )
+    return rows
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument(
         "--write",
         action="store_true",
-        help="rewrite PLANS.md (header + table + inputs fingerprint) instead of stdout",
+        help="rewrite PLANS.md (header + table) instead of stdout",
     )
     args = ap.parse_args()
 
-    from bench import BENCH_QUERIES
-
-    # Round-2 flagship operators audited alongside the bench set.
-    AUDIT_EXTRA = [
-        "knn_pq_adc",
-        "knn_ivf",
-        "dedup_semantic_clusters",
-        "pipeline_repetition_filter",
-        "events_session_window_batch",
-        "text_profile_by_source",
-        "cdc_latest_state",
-        "warehouse_incremental_agg_merge",
-        "graph_triangle_count",
-        "text_keyword_tfidf_topk",
-        "events_promo_overlap_join",
-        "pipeline_chunk_documents",
-        "pipeline_global_shuffle",
-        # Round-4 batch 2/3 operators.
-        "pipeline_bloom_membership",
-        "dedup_cdc_chunks",
-        "text_lm_score",
-        "text_trigram_novelty",
-        "embedding_outlier_by_label",
-        "text_bpe_apply",
-        "pipeline_quality_percentile_by_source",
-        # Round-4 batch 4/5 operators.
-        "agg_histogram_equiwidth",
-        "scalar_zorder_key",
-        "pipeline_sample_exact_k",
-        "stats_column_profile",
-        "pipeline_integrity_audit",
-        "embedding_random_projection",
-        "agg_histogram_equidepth",
-        "events_overlap_join_bucketed",
-        "pipeline_weighted_sample",
-        "pipeline_json_ingest_quarantine",
-        "pipeline_csv_ingest_quarantine",
-        "text_oov_rate",
-        "stats_profile_drift",
-        "knn_jl_rerank",
-        # Round-6 operators.
-        "multimodal_png_roundtrip",
-        "multimodal_gif_roundtrip",
-        "events_sessionization_capped",
-        "events_sessionization_capped_segmented",
-        "knn_quantized_int8",
-        "warehouse_snapshot_diff",
-        "graph_bfs_distances",
-        "dedup_streaming_gate_batch",
-        "events_funnel_stages",
-        "stats_robust",
-        "graph_degree_hubs",
-        "text_bm25",
-        "knn_lsh_bucketed",
-        # Round-13/14 operators. NOTE: building the *_materialized queries
-        # RUNS their staging write (write-once semantics is the operator;
-        # see plans/analytics_r7.py and plans/analytics_r8.py) — this
-        # audit, like any registry enumerator, performs those bounded
-        # parquet writes under .sfgen/stage.
-        "knn_ivf_pq",
-        "knn_graph_ivf",
-        "dedup_semantic_knn_graph_mutual",
-        "dedup_semantic_semdedup_merged",
-        "knn_ivf_pq_materialized",
-        "pipeline_incremental_semantic_dedup",
-        "retrieval_hybrid_rrf",
-    ]
-    from slr207_mapreduce_spark.plans.base import all_queries, plan_only
     from slr207_mapreduce_spark.session import get_session
 
     spark = get_session(
@@ -193,30 +162,12 @@ def main() -> int:
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_queries()
-
-    lines = [
-        "| query | shuffles | broadcasts | scans | pushdown | read cols | TakeOrdered | PyUDF | AQE |",
-        "|---|---|---|---|---|---|---|---|---|",
-    ]
-    for name in BENCH_QUERIES + AUDIT_EXTRA:
-        # plan_only (r14 VERDICT item 7): the *_materialized queries
-        # audit their from-raw twin (same oracle) and pay no store write
-        with plan_only():
-            a = audit(specs[name].build(spark, args.sf))
-        lines.append(
-            f"| {name} | {a['shuffles']} | {a['broadcasts']} | {a['scans']} | "
-            f"{'yes' if a['pushed_any'] else '—'} | {a['read_cols']} | "
-            f"{'yes' if a['take_ordered'] else '—'} | "
-            f"{'LEAKED' if a['python_udf'] else 'none'} | "
-            f"{'on' if a['aqe'] else 'OFF'} |"
-        )
-    table = "\n".join(lines)
+    rows = audit_rows(spark, args.sf)
+    table = "\n".join([TABLE_HEAD, *rows])
     if args.write:
-        doc = f"{HEADER}\n{table}\n\nInputs-Fingerprint: {inputs_fingerprint()}\n"
         with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-            f.write(doc)
-        print(f"PLANS.md rewritten ({len(lines) - 2} queries)")
+            f.write(f"{HEADER}\n{table}\n")
+        print(f"PLANS.md rewritten ({len(rows)} queries)")
     else:
         print(table)
     return 0
