@@ -11,8 +11,8 @@ expressed on DataFrames:
 2. count rows per partition (small job over partition ids);
 3. cumulative-sum those counts on the driver (one row per partition) into
    per-partition offsets;
-4. mapInPandas adds offset + within-partition ordinal, streaming Arrow
-   batches with a running counter — no per-partition materialization.
+4. one JVM projection adds offset + within-partition ordinal, the low
+   33 bits of ``monotonically_increasing_id()`` — no Python worker runs.
 
 The assigned id equals the global rank in the total order REGARDLESS of
 where range-partition boundaries land, because offsets are computed from
@@ -34,12 +34,36 @@ their terminal action via ``operators.graph.release_result``.
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_ORDINAL_BITS = 33  # monotonically_increasing_id() = (partition << 33) + ordinal
+
+
+def _frozen_prefix(
+    df: DataFrame, cols: list, num_partitions: int | None, part_agg: Column
+) -> tuple[DataFrame, list, list]:
+    """Range-partition + sort by ``cols``, tag ``__pid``, freeze with an
+    eager checkpoint (module docstring), then return the frozen frame,
+    ``part_agg`` per pid (0 if empty) and its exclusive prefix (offsets)."""
+    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    frozen = (
+        df.repartitionByRange(int(n), *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    by_pid = {
+        r["__pid"]: r["v"]  # Row.__pid would trip Row's dunder guard
+        for r in frozen.groupBy("__pid").agg(part_agg.alias("v")).collect()
+    }
+    per_part = [by_pid.get(pid, 0) for pid in range(max(by_pid, default=-1) + 1)]
+    return frozen, per_part, list(accumulate(per_part, initial=0))
 
 
 def assign_sequential_ids(
@@ -50,42 +74,32 @@ def assign_sequential_ids(
 ) -> DataFrame:
     """Dense 0..N-1 ids in the total order of ``order_by`` (must be a
     unique key for the ids to be deterministic). Entries may be column
-    names (ascending) or Column sort expressions (e.g. ``F.desc(...)``)."""
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    names (ascending) or Column sort expressions (e.g. ``F.desc(...)``).
+
+    Limits: a partition holding 2^33 rows or more (the ordinal's width)
+    raises ``ValueError`` on the driver. The ordinal must be evaluated
+    over the frozen partitions themselves: a row whose id's partition bits
+    differ from its ``__pid`` fails the query instead of colliding."""
     cols = [F.asc(c) if isinstance(c, str) else c for c in order_by]
-    # eager checkpoint FREEZES the range-partitioned layout (module
-    # docstring: boundary sampling is not job-stable) so the sizes pass
-    # and the id pass read the same physical partitions
-    sorted_df = (
-        df.repartitionByRange(int(n), *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    frozen, sizes, offsets = _frozen_prefix(df, cols, num_partitions, F.count("*"))
+    for pid, size in enumerate(sizes):
+        if size >= 1 << _ORDINAL_BITS:
+            raise ValueError(
+                f"partition {pid} holds {size} rows, over the "
+                f"{_ORDINAL_BITS}-bit ordinal; raise num_partitions"
+            )
+    # guard and id read one __mid evaluation: Catalyst never inlines a
+    # nondeterministic column into its consumers
+    seq = F.when(
+        F.shiftright("__mid", _ORDINAL_BITS) == F.col("__pid"),
+        F.lit(offsets).cast("array<bigint>")[F.col("__pid")]
+        + F.col("__mid").bitwiseAND((1 << _ORDINAL_BITS) - 1),
+    ).otherwise(F.raise_error(F.lit("seq id ordinal read off its frozen partition")))
+    return (
+        frozen.withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn(id_col, seq)
+        .drop("__pid", "__mid")
     )
-    sizes = {
-        r["__pid"]: r["cnt"]  # Row.__pid would trip Row's dunder guard
-        for r in sorted_df.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-
-    out_schema = sorted_df.drop("__pid").schema.add(id_col, "long", False)
-
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = offsets[int(pdf["__pid"].iloc[0])]
-            pdf = pdf.drop(columns="__pid")
-            pdf[id_col] = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    return sorted_df.mapInPandas(add_ids, schema=out_schema)
 
 
 def with_running_total(
@@ -99,29 +113,14 @@ def with_running_total(
     ``order_by`` — ``SUM() OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
     minus the current row, without the single-task global window: the same
     two-pass shape as :func:`assign_sequential_ids` with per-partition
-    SUMS (not counts) prefix-summed on the driver."""
-    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    SUMS (not counts) prefix-summed on the driver. The in-partition pass
+    stays an Arrow cumsum: a running sum has no exchange-free JVM form
+    (a window over ``__pid`` plans a hash exchange of the frozen frame)."""
     cols = [F.asc(c) for c in order_by]
-    # same layout-freeze as assign_sequential_ids (see module docstring)
-    sorted_df = (
-        df.repartitionByRange(int(n), *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    frozen, _, offsets = _frozen_prefix(
+        df, cols, num_partitions, F.sum(value_col).cast("long")
     )
-    sums = {
-        r["__pid"]: r["s"]
-        for r in sorted_df.groupBy("__pid")
-        .agg(F.sum(value_col).cast("long").alias("s"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-
-    out_schema = sorted_df.drop("__pid").schema.add(out_col, "long", False)
+    out_schema = frozen.drop("__pid").schema.add(out_col, "long", False)
 
     def add_prefix(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         seen = 0
@@ -135,4 +134,4 @@ def with_running_total(
             seen += int(csum.iloc[-1])
             yield pdf
 
-    return sorted_df.mapInPandas(add_prefix, schema=out_schema)
+    return frozen.mapInPandas(add_prefix, schema=out_schema)

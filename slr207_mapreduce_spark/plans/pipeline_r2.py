@@ -531,12 +531,12 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Stable dense id assignment (0..N-1 in (source, doc_id) order) "
     "via operators/ids.py::assign_sequential_ids — the two-pass "
     "zipWithIndex shape: distributed range-sort, per-partition counts, "
-    "driver-side prefix-sum of ONE ROW PER PARTITION, then an Arrow-"
-    "streamed ordinal pass. Identical output to the oracle's global "
-    "row_number, which Spark would execute on a SINGLE task (the "
-    "anti-pattern this operator exists to avoid); here every stage is "
-    "parallel and the driver holds only the partition-size vector. The "
-    "id-minting step every training-corpus build needs.",
+    "driver-side prefix-sum of ONE ROW PER PARTITION, then one JVM "
+    "projection adding offset + in-partition ordinal. Identical output "
+    "to the oracle's global row_number, which Spark would execute on a "
+    "SINGLE task (the anti-pattern this operator exists to avoid); here "
+    "every stage is parallel and the driver holds only the partition-size "
+    "vector. The id-minting step every training-corpus build needs.",
     tags=("pipeline", "ids"),
 )
 def pipeline_assign_ids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ doc → many chunks), keyed/total-order reduce = ListenerReducer.java:123-139
   cluster layout). Ordering key is the md5 of seed|doc_id, so the "random"
   permutation is data-independent and re-derivable; the dense 0..N-1
   position comes from operators/ids.py::assign_sequential_ids (range-sort
-  + per-partition offsets + Arrow ordinal pass), NOT a global-window
+  + per-partition offsets + one JVM ordinal projection), NOT a global-window
   row_number that would collapse onto one task. The oracle's ROW_NUMBER
   is the single-task formulation of the identical total order.
 """

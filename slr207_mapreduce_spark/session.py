@@ -28,18 +28,25 @@ def _default_shuffle_partitions() -> str:
     whatever the initial count, so the setting governs only the ceiling.
     On a real cluster, size it to 2-3× total cores or rely on the env
     override; partition BYTES (~64 MB-1 GB targets, guide §2.2) should
-    drive the choice at 100 TB."""
-    override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if override:
-        try:
-            return str(int(override))
-        except ValueError:
-            pass  # non-integer override: fall through to the derived value
+    drive the choice at 100 TB. A set but non-integer variable raises
+    ``ValueError``; an unset or empty one falls back."""
+    override = _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    if override is not None:
+        return str(override)
+    cores = _int_env("SPARK_GRAFT_CPUS")
+    return str(max(32, cores if cores is not None else os.cpu_count() or 8))
+
+
+def _int_env(name: str) -> int | None:
+    """``$name`` as an int, None when unset or empty; a malformed value
+    raises instead of silently selecting the fallback."""
+    raw = os.environ.get(name)
+    if not raw:
+        return None
     try:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+        return int(raw)
     except ValueError:
-        cores = os.cpu_count() or 8
-    return str(max(32, cores))
+        raise ValueError(f"${name}={raw!r} is not an integer") from None
 
 
 def _default_driver_memory() -> str:

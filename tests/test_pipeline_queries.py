@@ -7,6 +7,7 @@ stateless-vs-window scale split.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
@@ -243,6 +244,70 @@ def test_assign_ids_dense_unique_and_partition_invariant(spark):
         by_key = {(r.source, r.doc_id): r.seq_id for r in rows}
         ordered = sorted(by_key)
         assert [by_key[k] for k in ordered] == list(range(n))
+
+
+def test_assign_ids_pass_runs_no_python_worker(spark):
+    """The id pass is one JVM projection over the frozen layout: the
+    executed plan holds no Python map or eval node."""
+    from slr207_mapreduce_spark.operators.ids import assign_sequential_ids
+
+    out = assign_sequential_ids(spark.range(100), order_by=["id"], num_partitions=4)
+    assert [r.seq_id for r in out.orderBy("id").collect()] == list(range(100))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "n_rows,parts,key",
+    [
+        (5, 32, "asc"),  # most range partitions are empty
+        (25_000, 2, "asc"),  # a partition spans several Arrow batches (10,000 rows)
+        (1_000, 7, "desc"),  # Column sort key
+    ],
+)
+def test_assign_ids_equal_python_rank(spark, n_rows, parts, key):
+    from slr207_mapreduce_spark.operators.ids import assign_sequential_ids
+
+    d = spark.range(n_rows).select((F.col("id") * 7919 % n_rows).alias("k"))
+    order = [F.desc("k")] if key == "desc" else ["k"]
+    rows = assign_sequential_ids(d, order_by=order, num_partitions=parts).collect()
+    ranked = sorted((r.k for r in rows), reverse=key == "desc")
+    assert {r.k: r.seq_id for r in rows} == {k: i for i, k in enumerate(ranked)}
+
+
+def test_assign_ids_rejects_partition_over_ordinal_width(spark, monkeypatch):
+    """A partition holding 2^_ORDINAL_BITS rows or more would overflow the
+    ordinal into the partition bits; the driver raises before any id is
+    minted. Patched down to 2 bits (4 rows) so the check is testable."""
+    from slr207_mapreduce_spark.operators import ids
+
+    monkeypatch.setattr(ids, "_ORDINAL_BITS", 2)
+    ok = ids.assign_sequential_ids(spark.range(3), order_by=["id"], num_partitions=1)
+    assert sorted(r.seq_id for r in ok.collect()) == [0, 1, 2]
+    with pytest.raises(ValueError, match="partition 0 holds 4 rows"):
+        ids.assign_sequential_ids(spark.range(4), order_by=["id"], num_partitions=1)
+
+
+def test_assign_ids_guard_fails_off_frozen_partitions(spark, monkeypatch):
+    """Evaluated above a coalesce, the ordinal no longer counts rows of
+    the frozen partition its offset belongs to; the per-row guard fails
+    the query instead of minting colliding ids."""
+    from pyspark.errors import PySparkException
+
+    from slr207_mapreduce_spark.operators import ids
+
+    frozen_prefix = ids._frozen_prefix
+
+    def coalesced(*args):
+        frozen, sizes, offsets = frozen_prefix(*args)
+        return frozen.coalesce(1), sizes, offsets
+
+    monkeypatch.setattr(ids, "_frozen_prefix", coalesced)
+    out = ids.assign_sequential_ids(spark.range(100), order_by=["id"], num_partitions=4)
+    with pytest.raises(PySparkException, match="frozen partition"):
+        out.collect()
 
 
 def test_running_total_partition_invariant(spark):

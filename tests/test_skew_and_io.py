@@ -381,6 +381,25 @@ def test_default_driver_memory_derivation(monkeypatch):
     assert S._default_driver_memory() == "3g"
 
 
+def test_default_shuffle_partitions_rejects_malformed_env(monkeypatch):
+    """A malformed $SPARK_GRAFT_SHUFFLE_PARTITIONS or $SPARK_GRAFT_CPUS
+    raises, naming the variable and its value; unset falls back."""
+    from slr207_mapreduce_spark import session as S
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert S._default_shuffle_partitions() == str(max(32, os.cpu_count() or 8))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
+    assert S._default_shuffle_partitions() == "64"
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "48")
+    assert S._default_shuffle_partitions() == "48"
+    for name in ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_CPUS"):
+        monkeypatch.setenv(name, "auto")
+        with pytest.raises(ValueError, match=f"{name}='auto'"):
+            S._default_shuffle_partitions()
+        monkeypatch.delenv(name)
+
+
 def test_narrow_scan_rebalances_oversized_row_groups(spark, tmp_path):
     """A parquet file's real split count is its ROW-GROUP count: byte-range
     splits snap to row-group boundaries, so a file with 1 giant row group

@@ -8,12 +8,13 @@ checkpoint-based streaming recovery; this script actually kills things and
 proves the claim:
 
 Leg A — task-attempt chaos under batch queries. Every first task attempt
-of the documents scan stage raises (TaskContext.attemptNumber() == 0), on
-a `local[8,3]` master (maxFailures=3) so Spark retries the task from
-lineage. Three representative queries — the reference-parity wordcount,
-the MinHash LSH dedup, and a codec round-trip — must complete AND still
-match their DuckDB oracles exactly (row count, schema, values): recovery
-must be invisible in the answer, not just in the exit code.
+of the documents and orders scan stages raises
+(TaskContext.attemptNumber() == 0), on a `local[8,3]` master
+(maxFailures=3) so Spark retries the task from lineage. Three
+representative queries — the reference-parity wordcount, the MinHash LSH
+dedup, and a codec round-trip — must complete AND still match their
+DuckDB oracles exactly (row count, schema, values): recovery must be
+invisible in the answer, not just in the exit code.
 
 Leg B — streaming checkpoint recovery after a mid-run crash. A 6-file
 event stream (one file per day; file 5 is a byte-identical duplicate of
@@ -66,7 +67,12 @@ CHAOS_QUERIES = (
     # probe ranking, and the fused cells+codes ADC kernel all retried;
     # retries must not desync the routing mask from the LUTs
     "knn_ivf_pq",
+    # two-pass id assigner: retries under the frozen layout must mint the same ids
+    "pipeline_global_shuffle",
+    # persist-pinned loop invariants (ROADMAP D4): ranks exact after retries
+    "graph_pagerank",
 )
+CHAOS_TABLES = ("documents", "orders")
 
 
 def _chaos_wrap(df, marker_dir: str):
@@ -107,7 +113,7 @@ def leg_a(spark) -> dict:
 
     def chaos_load_table(spark_, name, sf_dir=None):
         df = orig_load(spark_, name, sf_dir)
-        if armed["on"] and name == "documents":
+        if armed["on"] and name in CHAOS_TABLES:
             df = _chaos_wrap(df, marker_dir)
         return df
 
@@ -128,11 +134,13 @@ def leg_a(spark) -> dict:
     try:
         for name in CHAOS_QUERIES:
             spark.catalog.clearCache()
+            injected_before = len(os.listdir(marker_dir))
             spdf = specs[name].build(spark, SF).toPandas()
             duck_pdf = con.execute(specs[name].oracle).df()
             problems = compare(spdf, duck_pdf)
             res["queries"][name] = {
                 "rows": len(spdf),
+                "injected": len(os.listdir(marker_dir)) - injected_before,
                 "oracle_match": not problems,
                 "problems": problems[:3],
             }
