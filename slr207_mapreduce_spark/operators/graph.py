@@ -1,13 +1,22 @@
 """Connected components — the cluster-merge step of a dedup pipeline
 (near-dup PAIRS become duplicate GROUPS only after transitive closure).
 
-Iterative label propagation over DataFrames: every node starts as its own
-label (its id); each round, every node takes the min label among itself
-and its neighbors; stop at fixpoint. Converges in O(diameter) rounds.
+Iterative label propagation over DataFrames on the CLOSED neighbourhood:
+the edge list is symmetrized and every endpoint gets a self-loop, so
+"min label among a node and its neighbours" is one aggregate over the
+pinned neighbour table. The labels are seeded straight from it (each
+node's closed-neighbourhood minimum id — what a first round from
+``label = node`` would compute), then each round propagates the min label
+one hop further; stop at fixpoint. Converges in O(diameter) rounds: a
+path of diameter d takes d rounds, a clique takes 1 (the seed is already
+final; the round only confirms it).
 
 Scale notes:
-- Each round is one join + one aggregation on the (symmetrized) edge list —
-  the classic MapReduce CC construction; Spark shuffles on node id.
+- Each round is one join + one aggregation on the pinned (symmetrized,
+  self-looped) edge list — the classic MapReduce CC construction; Spark
+  shuffles the round's labels on node id and the join output on the
+  neighbour id, and never the edge list. The self-loops keep every node's
+  own label in its min, so no join back to the previous labels is needed.
 - ``localCheckpoint`` truncates lineage each round: without it the plan
   doubles per iteration and planning time explodes by round ~15.
 - For web-scale graphs the large-star/small-star variant halves rounds;
@@ -140,14 +149,25 @@ def connected_components(
 ) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``edges``;
     cluster_id = min node id reachable (deterministic canonical label).
+    A NULL endpoint is kept as the row (NULL, NULL): it never takes or
+    passes on a label, so the other endpoint of its edge is clustered as if
+    the edge were absent.
+
+    The labels start from the SEED — each node's closed-neighbourhood
+    minimum, one aggregate over the pinned neighbour table that plans no
+    exchange (the table is already hash-partitioned on the group key).
+    A round is then one join of the neighbour table with the labels plus
+    one min aggregate grouped by neighbour; the self-loops carry each
+    node's own label into its min.
 
     ``on_round(round_index, delta)`` is called after each propagation
-    round with the 1-based round number and the round's total label-mass
-    decrease (0 exactly when no label changed) — observability for the
-    O(diameter) convergence claim (the round count must stay FLAT when
-    the graph grows by replicating components, since replication never
-    increases any component's diameter; measured at the emb_sf10 /
-    docs_sf10 tiers in SCALE.md and pinned by tests/test_graph.py).
+    round with the 1-based round number (round 1 is the first round after
+    the seed) and the round's total label-mass decrease (0 exactly when no
+    label changed) — observability for the O(diameter) convergence claim
+    (the round count must stay FLAT when the graph grows by replicating
+    components, since replication never increases any component's
+    diameter; measured at the emb_sf10 / docs_sf10 tiers in SCALE.md and
+    pinned by tests/test_graph.py).
 
     Convergence detection costs ONE scan+agg of the round's already-
     materialized frame, not a join: labels are MONOTONE NON-INCREASING
@@ -159,42 +179,39 @@ def connected_components(
     extra exchange per round for a boolean. decimal(38,0) keeps the sum
     exact far beyond int64 (1e12 nodes x 1e12-scale ids < 1e38)."""
     sc = edges.sparkSession.sparkContext
-    # materialize once, hash-partitioned by the per-round join key (r16,
-    # guide §2.4 — see _pin_partitioned): the loop re-evaluates sym every
-    # round, and the symmetrizing union would otherwise recompute the
-    # (possibly very expensive) upstream edge pipeline twice per round;
-    # pinning the partitioning additionally deletes the per-round
-    # re-exchange of the full edge set that the checkpointed
-    # (UnknownPartitioning) form paid on every iteration.
+    # The closed neighbourhood in one pass over edges: both directions plus
+    # a self-loop per endpoint. A row with exactly one NULL side is dropped,
+    # so a NULL endpoint keeps only its (NULL, NULL) self-loop and stays
+    # isolated. Materialized once, hash-partitioned by the per-round join
+    # key (see _pin_partitioned): the loop reads sym every round, and the
+    # seed's group-by and every round's join then stream it with no
+    # exchange, without recomputing the (possibly very expensive) upstream
+    # edge pipeline.
+    s, d = F.col(src), F.col(dst)
+    closed = [
+        F.struct(a.alias("a"), b.alias("b"))
+        for a, b in ((s, d), (d, s), (s, s), (d, d))
+    ]
     sym = _pin_partitioned(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.explode(F.array(*closed)).alias("e"))
+        .select("e.a", "e.b")
+        .where(F.isnull("a") == F.isnull("b"))
         .distinct(),
         "a",
     )
     prev_ids: set[int] = set()
     converged = False
     try:
-        labels = (
-            sym.select(F.col("a").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-        )
+        labels = sym.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("label"))
         prev_sum = _label_sum(labels)
         for round_idx in range(1, max_iter + 1):
-            neighbor_min = (
-                sym.join(labels, sym.a == labels.node)
-                .groupBy(F.col("b").alias("node2"))
-                .agg(F.min("label").alias("nmin"))
-            )
+            # left join: the NULL node's self-loop matches no label and
+            # keeps its NULL label; every other a has a label (the node set
+            # never changes: it is sym's a-set = b-set)
             new_labels, new_ids = _ckpt(  # truncate lineage per round
-                labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                )
+                sym.join(labels, sym.a == labels.node, "left")
+                .groupBy(F.col("b").alias("node"))
+                .agg(F.min("label").alias("label"))
             )
             cur_sum = _label_sum(new_labels)
             delta = prev_sum - cur_sum  # 0 <=> fixed point (monotonicity)
