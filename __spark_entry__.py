@@ -1,12 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+A caller runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+values). ``tools/check.py`` is that comparison over the whole registry.
 
 All real logic lives in ``slr207_mapreduce_spark/``; this module is a thin
-adapter over the query registry (slr207_mapreduce_spark/plans/base.py).
+adapter over the query registry (slr207_mapreduce_spark/plans/base.py),
+whose dicts are in registration order.
 """
 
 from __future__ import annotations

@@ -122,16 +122,17 @@ def _label_sum(df: DataFrame) -> int:
     """Exact decimal sum of ``df.label`` — connected_components' convergence
     probe."""
     total = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    s = df.agg(total).collect()[0]["s"]
+    row = df.agg(total, F.count("label").alias("n")).collect()[0]
+    s = row["s"]
     if s is None:
-        # null sum = empty frame (trivially converged, return 0) OR a
-        # >10^38 decimal overflow, which non-ANSI Spark also reports as
-        # null — indistinguishable by value, and two consecutive
-        # overflow-nulls would read as a false fixed point. Unreachable
-        # with int64 labels (max possible sum ~2^126 < 10^38 needs more
-        # distinct nodes than int64 holds), but fail loudly rather than
-        # mis-cluster if a future label type changes that.
-        if not df.isEmpty():
+        # null sum = no non-NULL label (empty frame, or only the NULL
+        # node: trivially converged, return 0) OR a >10^38 decimal
+        # overflow, which non-ANSI Spark also reports as null — two
+        # consecutive overflow-nulls would read as a false fixed point.
+        # Unreachable with int64 labels (max possible sum ~2^126 < 10^38
+        # needs more distinct nodes than int64 holds), but fail loudly
+        # rather than mis-cluster if a future label type changes that.
+        if row["n"]:
             raise ArithmeticError(
                 "label-sum overflowed decimal(38,0) — convergence "
                 "detection would be unsound; shrink label magnitudes"

@@ -70,7 +70,7 @@ _INT8_K = similarity_queries.INT8_K
 # graph makes EVERY row a query, so its exact reference is O(N^2) — the
 # registered audit instead samples _GRAPH_NQ rows by the seeded md5
 # ranking both engines share (tools/measure_graph_scale.py's
-# methodology, now driver-hash-checked every window instead of
+# methodology, now oracle-checked by tools/check.py instead of
 # harness-only) and scores the graph's edges for those rows against
 # knn_bruteforce's exact top-k (self-excluded on both sides).
 _GRAPH_NQ = 50
@@ -173,7 +173,7 @@ def _recall_oracle() -> str:
     f"{_GRAPH_NQ}-row SAMPLED exact reference (seeded md5 row "
     "selection, both engines; every row is a graph query, so the full "
     "reference would be O(N^2) — the measure_graph_scale methodology, "
-    "now driver-hash-checked every window instead of harness-only). "
+    "now oracle-checked by tools/check.py instead of harness-only). "
     "The recall join/agg is exact (the driver hash-checks it) even "
     "though the tier inputs are approximate — the systematic quality "
     "audit the per-tier exactness oracles cannot provide.",

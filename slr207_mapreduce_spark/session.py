@@ -89,6 +89,9 @@ SCALE_DEFAULTS: dict[str, str] = {
     # >> open cost, so large-scale split planning is unchanged.
     "spark.sql.files.openCostInBytes": "524288",
     "spark.sql.parquet.filterPushdown": "true",
+    # Tools print measurement JSON to stdout; the console progress bar
+    # would interleave with it.
+    "spark.ui.showConsoleProgress": "false",
     # spark.sql.shuffle.partitions is ENV-DEPENDENT and therefore resolved
     # per call in get_session() via _default_shuffle_partitions() —
     # baking it into this literal froze the env at import time, silently

@@ -50,10 +50,7 @@ def _pin_utc(spark: SparkSession) -> None:
     # Timestamps in the testdata are timezone-naive parquet values; pin the
     # session to UTC so Spark and the DuckDB oracle agree bit-for-bit on
     # every timestamp comparison and truncation.
-    try:
-        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 

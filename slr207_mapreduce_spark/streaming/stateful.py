@@ -272,11 +272,8 @@ def _typed_state_ready(spark) -> bool:
 
     if not ensure_protobuf():
         return False
-    try:
-        prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    except Exception:
-        prov = ""
-    return "RocksDB" in (prov or "")
+    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    return "RocksDB" in prov
 
 
 def enable_typed_state(spark) -> bool:

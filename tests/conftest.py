@@ -27,17 +27,3 @@ def spark():
     )
     yield spark
 
-
-@pytest.fixture(scope="session")
-def duck():
-    import duckdb
-
-    from slr207_mapreduce_spark.sources.tables import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_CORRECT, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    yield con
-    con.close()

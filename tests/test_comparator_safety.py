@@ -1,14 +1,15 @@
-"""Every registered query's output must be comparator-safe.
+"""Every registered query's output must be comparator-safe at sf0.001.
 
-The driver adjudicates correctness by materializing each query's output to
-pandas and canonicalizing with a raw ``sort_values`` + value-hash over the
+Correctness is adjudicated by materializing each query's output to pandas
+and canonicalizing with a raw ``sort_values`` + value-hash over the
 untouched cells. That crashes or silently mismatches on list/struct/bytes/
 Decimal/mixed-type cells even when values agree with the oracle (observed
-round 1: ``unhashable type: list`` on agg_collect_sorted). The driver samples
-only a fixed subset of queries per round, so the ONLY line of defense for the
-unsampled remainder is this sweep: walk every registered query at sf0.001 and
-assert scalar, single-typed, hashable cells — the exact shape
-``tools/check.py::comparator_unsafe_cols`` enforces inside the local gate.
+round 1: ``unhashable type: list`` on agg_collect_sorted). ``tools/check.py``
+runs the same cell check at sf0.01; this sweep walks every registered query
+on the smallest tier too, where near-empty groups and all-NULL columns can
+change what pandas makes of a cell, and asserts scalar, single-typed,
+hashable cells — the shape ``tools/check.py::comparator_unsafe_cols``
+enforces.
 """
 
 from __future__ import annotations
@@ -24,21 +25,7 @@ def _all_specs():
     return sorted(all_queries().items())
 
 
-def _window_or_slow():
-    # Default path = the driver's 50-query window (the only outputs the
-    # driver materializes this round, i.e. the only ones that can crash
-    # its comparator); the full-registry sweep is the `slow` tier (r15
-    # VERDICT item 2) and runs in the repo's own verification flow.
-    from slr207_mapreduce_spark.plans.base import DRIVER_SAMPLE_FIRST
-
-    window = set(DRIVER_SAMPLE_FIRST)
-    return [
-        (pair if pair[0] in window else pytest.param(*pair, marks=pytest.mark.slow))
-        for pair in _all_specs()
-    ]
-
-
-@pytest.mark.parametrize("name,spec", _window_or_slow(), ids=lambda v: v if isinstance(v, str) else "")
+@pytest.mark.parametrize("name,spec", _all_specs(), ids=lambda v: v if isinstance(v, str) else "")
 def test_query_output_is_comparator_safe(spark, name, spec):
     from tools.check import comparator_unsafe_cols
 
@@ -47,7 +34,7 @@ def test_query_output_is_comparator_safe(spark, name, spec):
     pdf = spec.build(spark, SF_SMOKE).limit(200).toPandas()
     unsafe = comparator_unsafe_cols(pdf)
     assert not unsafe, (
-        f"{name} emits cells the driver comparator chokes on: {unsafe}; "
+        f"{name} emits cells the comparator chokes on: {unsafe}; "
         "serialize to scalar (array_join / cast) in BOTH the Spark builder "
         "and the oracle SQL"
     )

@@ -34,19 +34,27 @@ def test_cc_long_chain_converges(spark):
     assert len(got) == n + 1
 
 
-def test_cc_null_endpoint_never_takes_or_passes_a_label(spark):
+@pytest.mark.parametrize(
+    "edge_rows,expected",
+    [
+        (
+            [(1, 2), (None, 3), (4, None), (5, 5)],
+            {(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (None, None)},
+        ),
+        ([(None, None)], {(None, None)}),
+    ],
+    ids=["mixed", "all_null"],
+)
+def test_cc_null_endpoint_never_takes_or_passes_a_label(spark, edge_rows, expected):
     """An edge with a NULL endpoint clusters its other endpoint alone, and
-    the NULL node comes back as the single row (NULL, NULL)."""
+    the NULL node comes back as the single row (NULL, NULL) — also when
+    it is the only node."""
     from slr207_mapreduce_spark.operators.graph import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (None, 3), (4, None), (5, 5)], "src long, dst long"
-    )
+    edges = spark.createDataFrame(edge_rows, "src long, dst long")
     got = connected_components(edges).collect()
-    assert len(got) == 6
-    assert {(r["node"], r["cluster_id"]) for r in got} == {
-        (1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (None, None),
-    }
+    assert len(got) == len(expected)
+    assert {(r["node"], r["cluster_id"]) for r in got} == expected
 
 
 def _union_find_labels(edges) -> set:

@@ -1,6 +1,9 @@
-"""The local replica of the driver's t2 gate: every registered query with an
-oracle must EXACTLY match DuckDB on sf0.01 (row count, column names, values).
-Strictly stronger than the driver's value-hash."""
+"""Every registered query against its DuckDB oracle on sf0.01.
+
+Each case is ``tools/check.py``'s per-query check: an oracled query must
+match DuckDB exactly (row count, column names, values) with comparator-safe
+cells on both sides; a rows-only query (``oracle=None``) must build, run and
+emit comparator-safe cells."""
 
 from __future__ import annotations
 
@@ -15,184 +18,12 @@ def _specs():
     return all_queries()
 
 
-def pytest_generate_tests(metafunc):
-    if "qname" in metafunc.fixturenames:
-        # Default path = the driver's own 50-query adjudication window
-        # (sentinels + rewritten-priority + stalest fill) — the exact
-        # surface the driver will hash this round, preflighted on every
-        # run. The full-registry sweep is the `slow` tier (r15 VERDICT
-        # item 2: the suite must fit the driver's verify budget); it
-        # still runs in the repo's own verification flow and is
-        # duplicated by `python tools/check.py` (exact values, strictly
-        # stronger), which every optimization gate uses.
-        from slr207_mapreduce_spark.plans.base import DRIVER_SAMPLE_FIRST
+@pytest.mark.parametrize("qname", sorted(_specs()))
+def test_query_matches_oracle(spark, qname):
+    from tools.check import check_one
 
-        window = set(DRIVER_SAMPLE_FIRST)
-        metafunc.parametrize(
-            "qname",
-            [
-                n if n in window else pytest.param(n, marks=pytest.mark.slow)
-                for n in sorted(_specs())
-            ],
-        )
-
-
-def test_query_matches_oracle(spark, duck, qname):
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from check import compare
-
-    spec = _specs()[qname]
-    spark_pdf = spec.build(spark, SF_CORRECT).toPandas()
-    if spec.oracle is None:
-        assert len(spark_pdf) >= 0  # rows-only check
-        return
-    duck_pdf = duck.execute(spec.oracle).df()
-    problems = compare(spark_pdf, duck_pdf)
-    assert not problems, f"{qname}: {problems[:5]}"
-
-
-def _last_adjudicated(max_round: int | None = None):
-    """name -> latest round number with driver evidence, over every
-    CORRECTNESS_r*.json present in the repo root. ``max_round`` (exclusive
-    upper bound, if given) drops newer artifacts — the rotation test uses
-    it so the driver landing the current round's artifact after the final
-    commit does not redden a finished tree."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    last: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        if max_round is not None and rnd >= max_round:
-            continue
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _artifact_rounds():
-    import glob
-    import os
-    import re
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    return sorted(
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    )
-
-
-def test_driver_sample_rotation():
-    """Round-10 contract — the FRESHNESS rotation (r09 VERDICT item 1).
-
-    The driver adjudicates the FIRST 50 registry entries. With cumulative
-    adjudication closed at 251/251 in r09, the window must now be: the 5
-    standing sentinels + EXACTLY the 45 stalest registry names under the
-    deterministic order (last-adjudicated round, name), never-adjudicated
-    names sorting first as round 0. This makes min(last-adjudicated round)
-    over the registry rise every round — staleness can never silently
-    accumulate again.
-
-    Round-11 refinement (r10 VERDICT item 1 + ADVICE): the expected window
-    is computed from artifacts of rounds STRICTLY BELOW base.WINDOW_ROUND,
-    so the driver committing CORRECTNESS_r{WINDOW_ROUND}.json after the
-    round's final commit does not redden a finished tree. WINDOW_ROUND
-    itself is pinned to at most max(artifact round) + 1, so the constant
-    cannot be frozen ahead to dodge future rotations; the one-round grace
-    this leaves (a tree holding last round's window plus last round's own
-    artifact is byte-identical to a finished tree) is closed by
-    tools/rotation.py at round start, not by this test."""
-    from slr207_mapreduce_spark.plans.base import (
-        DRIVER_SAMPLE_FIRST,
-        REWRITTEN_PRIORITY_NAMES,
-        ROWS_ONLY_WINDOW_NAMES,
-        WINDOW_ROUND,
-    )
-
-    specs = _specs()
-    first50 = list(specs)[:50]
-    assert list(DRIVER_SAMPLE_FIRST) == first50
-    no_oracle = {n for n in first50 if specs[n].oracle is None}
-    assert no_oracle == set(ROWS_ONLY_WINDOW_NAMES)
-
-    rounds = _artifact_rounds()
-    if rounds:
-        assert WINDOW_ROUND <= max(rounds) + 1, (
-            f"WINDOW_ROUND={WINDOW_ROUND} frozen ahead of driver evidence "
-            f"(newest artifact is r{max(rounds)})"
-        )
-    last = _last_adjudicated(max_round=WINDOW_ROUND)
-    if not last:
-        return  # fresh checkout without driver artifacts
-    sentinels = first50[:5]
-    # r16 extension: the rewritten-priority tier (queries whose
-    # implementation changed in an optimization round after their last
-    # adjudication — r15 VERDICT item 3) occupies the slots right after
-    # the sentinels, then the stalest order fills the remainder. Both
-    # tiers are literal and deterministic; priority names must be real,
-    # registered, non-sentinel queries.
-    prio = list(REWRITTEN_PRIORITY_NAMES)
-    assert len(set(prio)) == len(prio) and not (set(prio) & set(sentinels))
-    assert all(n in specs for n in prio)
-    assert first50[5 : 5 + len(prio)] == prio
-    rest_sorted = sorted(
-        (n for n in specs if n not in sentinels and n not in prio),
-        key=lambda n: (last.get(n, 0), n),
-    )
-    expected = set(rest_sorted[: 45 - len(prio)])
-    actual = set(first50) - set(sentinels) - set(prio)
-    assert actual == expected, (
-        f"window must hold the priority tier + the stalest remainder; "
-        f"missing={sorted(expected - actual)} extra={sorted(actual - expected)}"
-    )
-    # Monotone freshness: every name OUTSIDE the window is strictly
-    # fresher than the stalest name in the registry (ties at the stalest
-    # round must all be inside), so this round's adjudication raises the
-    # registry-wide minimum.
-    stalest = min(last.get(n, 0) for n in specs)
-    outside_min = min(last.get(n, 0) for n in specs if n not in first50)
-    assert outside_min > stalest or stalest == outside_min == max(
-        last.get(n, 0) for n in specs
-    ), "window misses a name tied at the stalest adjudication round"
-
-
-def test_registry_growth_joins_driver_window():
-    """Registry-growth policy (r07 VERDICT item 5): a query added after the
-    r07 registry snapshot must sit in the current round's
-    DRIVER_SAMPLE_FIRST window, carry an explicit deferral in
-    base.DEFERRED_NEW_NAMES, or already be driver-adjudicated in a prior
-    round's CORRECTNESS artifact — new code must not silently join the
-    never-adjudicated backlog."""
-    import os
-
-    from slr207_mapreduce_spark.plans.base import (
-        DEFERRED_NEW_NAMES,
-        DRIVER_SAMPLE_FIRST,
-    )
-
-    snap_path = os.path.join(os.path.dirname(__file__), "data", "registry_r07.txt")
-    with open(snap_path) as f:
-        snapshot = {line.strip() for line in f if line.strip()}
-    specs = _specs()
-    new_names = set(specs) - snapshot
-    adjudicated = set(_last_adjudicated())
-    uncovered = (
-        new_names
-        - set(DRIVER_SAMPLE_FIRST)
-        - set(DEFERRED_NEW_NAMES)
-        - adjudicated
-    )
-    assert not uncovered, (
-        f"names added after the r07 snapshot must enter DRIVER_SAMPLE_FIRST, "
-        f"DEFERRED_NEW_NAMES, or already be adjudicated: {sorted(uncovered)}"
-    )
-    # deferrals must be real registry names (no stale entries)
-    assert set(DEFERRED_NEW_NAMES) <= set(specs)
+    line, verdict = check_one(_specs()[qname], spark, SF_CORRECT)
+    assert verdict != "fail", line
 
 
 def test_bench_queries_are_registered_and_oracled():
@@ -200,9 +31,7 @@ def test_bench_queries_are_registered_and_oracled():
     full DuckDB oracle — the bench set is the most-audited surface."""
     import bench
 
-    from slr207_mapreduce_spark.plans.base import all_queries
-
-    specs = all_queries()
+    specs = _specs()
     for name in bench.BENCH_QUERIES:
         assert name in specs, name
         assert specs[name].oracle is not None, name

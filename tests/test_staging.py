@@ -111,10 +111,12 @@ def test_repo_root_falls_back_to_cache_outside_checkout(monkeypatch):
     """r14 ADVICE item 4: an installed copy (site-packages) must not
     stage stores inside its own install tree — outside a writable git
     checkout the staging root falls back to the user cache dir."""
+    import slr207_mapreduce_spark
     from slr207_mapreduce_spark.sources import staging
 
-    in_checkout = staging._repo_root()
-    assert os.path.isdir(os.path.join(in_checkout, ".git"))
+    package_dir = os.path.dirname(os.path.abspath(slr207_mapreduce_spark.__file__))
+    monkeypatch.setattr(staging, "_checkout_ok", lambda root: True)
+    assert staging._repo_root() == os.path.dirname(package_dir)
     monkeypatch.setattr(staging, "_checkout_ok", lambda root: False)
     monkeypatch.setenv("XDG_CACHE_HOME", "/tmp/fake-xdg")
     assert staging._repo_root() == "/tmp/fake-xdg/slr207_mapreduce_spark"

@@ -175,7 +175,7 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
     return problems
 
 
-def _check_one(spec, spark, sf_dir: str) -> tuple[str, str]:
+def check_one(spec, spark, sf_dir: str) -> tuple[str, str]:
     """(status_line, verdict) for one spec; verdict in {pass, ok?, fail}.
 
     Thread-safe by construction: SparkSession job submission is thread-safe
@@ -263,14 +263,14 @@ def main() -> int:
 
     failed = []
     if args.workers <= 1:
-        results = (_check_one(specs[n], spark, args.sf) for n in names)
+        results = (check_one(specs[n], spark, args.sf) for n in names)
         for line, verdict in results:
             print(line, flush=True)
             if verdict == "fail":
                 failed.append(line)
     else:
         with ThreadPoolExecutor(max_workers=args.workers) as pool:
-            futs = [pool.submit(_check_one, specs[n], spark, args.sf) for n in names]
+            futs = [pool.submit(check_one, specs[n], spark, args.sf) for n in names]
             for fut in futs:  # original order, but execution overlaps
                 line, verdict = fut.result()
                 print(line, flush=True)
