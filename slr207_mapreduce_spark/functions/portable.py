@@ -142,7 +142,7 @@ def exact_total(sum_col: Column | str, digits: int) -> Column:
 
 
 # Count-min geometry shared by the batch events sketch
-# (plans/analytics_r5.py), the streaming counters (streaming/ops.py),
+# (plans/events.py), the streaming counters (streaming/ops.py),
 # and the stream==batch parity test — ONE definition so a one-sided
 # change desyncs imports, not silently-matching stale literals
 # (r11 ADVICE item 2).
@@ -172,7 +172,7 @@ def countmin_hash_rows(key: Column, depth: int, width: int, seed0: int) -> Colum
     """The count-min bucket array: ``array<struct<h: long, b: long>>`` with
     one entry per sketch row — ``h`` the row index, ``b`` the portable-md5
     bucket of ``key`` under seed ``seed0 + h``. ONE definition shared by
-    the batch sketches (plans/analytics_r5.py), the streaming counters
+    the batch sketches (plans/text.py, plans/events.py), the streaming counters
     (streaming/ops.py), and the parity tests: stream==batch counter
     equality is load-bearing (pinned in tests/test_streaming.py), so the
     construction must not be able to drift between copies. The DuckDB

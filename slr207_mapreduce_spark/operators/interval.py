@@ -1,5 +1,5 @@
 """Bucketed interval-overlap join — the large×large companion to the
-broadcast nested-loop banding join (plans/joins.py::join_range_nonequi) and
+broadcast nested-loop banding join (plans/relational.py::join_range_nonequi) and
 the small-interval-set overlap join (events_promo_overlap_join).
 
 A theta-join on ``l_start <= r_end AND l_end >= r_start`` between two LARGE

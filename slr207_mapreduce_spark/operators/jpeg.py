@@ -21,7 +21,7 @@ value-preserving for blocks the DCT maps to integer coefficients. A
 CONSTANT 8×8 block has exactly one nonzero coefficient, DC = 8·(v-128) —
 an exact integer — so encode→decode reconstructs the block bit-for-bit
 and the registered round-trip query's pixel sums stay predictable by
-plain arithmetic in DuckDB (plans/multimodal_queries.py). Decoder
+plain arithmetic in DuckDB (plans/multimodal.py). Decoder
 conformance is additionally pinned against hand-packed byte streams
 built WITHOUT this encoder, and arbitrary-content round-trips are
 bounded by the coefficient-rounding error budget (tests/test_llm_ops.py).

@@ -274,7 +274,7 @@ def signbit_bucket_dims_sql(vec_expr: str, dims: list[int]) -> str:
 
 # --- Auto-scaled probe budgets (r10 VERDICT item 2) -----------------------
 #
-# The r10 recall audit (plans/recall_report.py) measured recall FALLING with
+# The r10 recall audit (knn_recall_report) measured recall FALLING with
 # corpus size at fixed probe budgets (LSH 0.80→0.56, IVF 0.60→0.30 at
 # sf0.01→sf0.1) and hand-measured the dials that restore it (SCALE.md:
 # tables 8→16, nprobe 3→12, rerank 20→150). These helpers automate that

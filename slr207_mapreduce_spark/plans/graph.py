@@ -1,52 +1,18 @@
-"""Duplicate-cluster query: connected components over the MinHash-LSH
-candidate pairs (operators/graph.py). The oracle reproduces the transitive
-closure with a DuckDB recursive CTE — an iterative Spark algorithm that is
-still exactly checkable."""
+"""Graph queries (``graph_*``; operators in
+slr207_mapreduce_spark/operators/graph.py): PageRank, triangle counting,
+degree hubs and BFS distances over edge lists derived from the star schema.
+All arithmetic is integer (PageRank in 1e12 fixed-point units), and the
+iterative operators checkpoint their lineage per round; the oracles replay
+the same rounds in DuckDB SQL, so the results stay exactly checkable.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from slr207_mapreduce_spark.operators.dedup import minhash_lsh_candidates, minhash_lsh_sql
-from slr207_mapreduce_spark.operators.graph import (
-    bfs_distances_sql,
-    connected_components,
-    pagerank_fp_sql,
-)
+from slr207_mapreduce_spark.operators.graph import bfs_distances_sql, pagerank_fp_sql
 from slr207_mapreduce_spark.plans.base import register
 from slr207_mapreduce_spark.sources.tables import load_table
-
-
-@register(
-    "dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({minhash_lsh_sql(6, 2, 3)})
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, reach.r
-      FROM reach JOIN edges e ON e.src = reach.node
-    )
-    SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node
-    """,
-    doc="Duplicate clusters: connected components (iterative min-label "
-    "propagation, O(diameter) joins, lineage checkpointed per round) over "
-    "the MinHash-LSH candidate pairs — near-dup PAIRS become duplicate "
-    "GROUPS only after transitive closure. Oracle: recursive-CTE closure.",
-    tags=("dedup", "graph", "iterative"),
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_candidates(d, num_hashes=6, band_size=2, shingle_n=3)
-    return connected_components(pairs, src="doc_a", dst="doc_b")
 
 
 _CS_EDGES_SQL = """
@@ -229,75 +195,6 @@ def graph_degree_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_cluster_keep_canonical",
-    oracle=f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({minhash_lsh_sql(6, 2, 3)})
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, reach.r
-      FROM reach JOIN edges e ON e.src = reach.node
-    ),
-    comp AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
-    labeled AS (
-      SELECT d.doc_id,
-             COALESCE(comp.cluster_id, d.doc_id) AS cluster_id,
-             d.n_chars
-      FROM documents d LEFT JOIN comp ON comp.node = d.doc_id
-    )
-    SELECT doc_id, cluster_id,
-           (ROW_NUMBER() OVER (PARTITION BY cluster_id
-                               ORDER BY n_chars DESC, doc_id ASC) = 1)
-             AS is_canonical
-    FROM labeled
-    """,
-    doc="The near-dedup KEEP decision: LSH pairs -> connected components "
-    "-> every document labeled with its duplicate cluster (singletons = "
-    "their own id via a left join) -> ONE canonical survivor per cluster "
-    "by the keep-longest heuristic (n_chars desc, doc_id asc tie-break) "
-    "via max_by. Downstream corpora filter on is_canonical. This closes "
-    "the dedup lifecycle: candidate PAIRS (dedup_minhash_lsh) -> GROUPS "
-    "(dedup_clusters) -> per-doc retention verdict. The canonical choice "
-    "is a broadcast-joinable (cluster_id, keeper) map — cluster count "
-    "<< doc count at any scale.",
-    tags=("dedup", "graph"),
-)
-def dedup_cluster_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    d = load_table(spark, "documents", sf_dir)
-    pairs = minhash_lsh_candidates(d, num_hashes=6, band_size=2, shingle_n=3)
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    labeled = (
-        d.select("doc_id", "n_chars")
-        .join(comp, comp.node == F.col("doc_id"), "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-            "n_chars",
-        )
-    )
-    keeper = labeled.groupBy("cluster_id").agg(
-        F.max_by("doc_id", F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg"))).alias(
-            "keep_doc"
-        )
-    )
-    return labeled.join(F.broadcast(keeper), "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("keep_doc")).alias("is_canonical"),
-    )
-
-
 _BFS_SEEDS_SQL = """
       SELECT c_custkey AS node
       FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -338,3 +235,4 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("node"))
     )
     return bfs_distances(edges, seeds, max_hops=4)
+

@@ -1,13 +1,14 @@
-"""Multimodal-column queries (north-star family; operators in
+"""Multimodal-column queries (``multimodal_*``; operators in
 slr207_mapreduce_spark/operators/multimodal.py).
 
-Every query here decodes REAL bytes (r08 VERDICT item 5 retired the
-md5-stub family): PNG, GIF89a/LZW, baseline JPEG gray + 4:2:0 color, PCM
-WAV, G.711 mu-law, P6 PPM, the RAWV frame container, and MJPEG-in-AVI —
-byte-level encode/decode with closed-form oracles. The three pipeline
-stages the stubs used to stand in for (full-decode feature extraction,
-float-geometry thumbnail, no-decode frame indexing) now run over the real
-PPM/RAWV container paths.
+Every query here decodes REAL bytes: PNG, GIF89a/LZW, baseline JPEG gray +
+4:2:0 color, PCM WAV, G.711 mu-law, P6 PPM, the RAWV frame container, and
+MJPEG-in-AVI — byte-level encode/decode with closed-form oracles. The
+pipeline stages (full-decode feature extraction, float-geometry
+thumbnail, no-decode frame indexing) run over the real PPM/RAWV container
+paths. Image near-duplicates use an integer-luma 8x8 grid → 56-bit dHash →
+bit-sampling LSH bands (complete recall for hamming <= 6 by pigeonhole over
+7 bands).
 """
 
 from __future__ import annotations
@@ -757,3 +758,140 @@ def multimodal_wav_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, "documents", sf_dir)
     return wav_analysis_features(synth_wav_blobs(d, rate=8000))
+
+
+_PHASH_MAX_HAMMING = 6
+
+
+def _phash_oracle() -> str:
+    # Replays the fixture pixels (operators/multimodal.py:synth_phash_blobs),
+    # the integer nearest 8x8 resample, the luma dHash, and the banded join.
+    return f"""
+    WITH params AS (
+      SELECT doc_id,
+             (doc_id - doc_id % 4) % 65521 AS bb,
+             doc_id % 4 AS v
+      FROM documents
+    ),
+    grid AS (
+      SELECT p.doc_id, p.bb, p.v, ti.i2, tj.j2,
+             ((ti.i2 * 12) // 8) AS yi, ((tj.j2 * 16) // 8) AS xi,
+             ((ti.i2 * 12) // 8) * 16 + ((tj.j2 * 16) // 8) AS cell
+      FROM params p,
+           (SELECT UNNEST(range(8)) AS i2) ti,
+           (SELECT UNNEST(range(8)) AS j2) tj
+    ),
+    px AS (
+      SELECT doc_id, i2, j2,
+             CASE WHEN v > 0 AND yi = 0 AND xi = v * 3 - 2
+                  THEN ((bb * 131 + cell * 151 + 11) * (bb * 313 + cell * 211 + 29)
+                        % 65521 % 256 + 128) % 256
+                  ELSE (bb * 131 + cell * 151 + 11) * (bb * 313 + cell * 211 + 29)
+                       % 65521 % 256 END AS r,
+             CASE WHEN v > 0 AND yi = 1 AND xi = v * 3 - 1
+                  THEN ((bb * 173 + cell * 59 + 47) * (bb * 419 + cell * 101 + 7)
+                        % 65521 % 256 + 128) % 256
+                  ELSE (bb * 173 + cell * 59 + 47) * (bb * 419 + cell * 101 + 7)
+                       % 65521 % 256 END AS g,
+             (bb * 233 + cell * 241 + 91) * (bb * 523 + cell * 37 + 3)
+             % 65521 % 256 AS b
+      FROM grid
+    ),
+    hashes AS (
+      SELECT a.doc_id,
+             CAST(SUM(CASE WHEN 299 * a.r + 587 * a.g + 114 * a.b
+                                < 299 * c.r + 587 * c.g + 114 * c.b
+                           THEN 1::BIGINT << (a.i2 * 7 + a.j2) ELSE 0 END)
+                  AS BIGINT) AS dhash
+      FROM px a
+      JOIN px c ON c.doc_id = a.doc_id AND c.i2 = a.i2 AND c.j2 = a.j2 + 1
+      WHERE a.j2 < 7
+      GROUP BY a.doc_id
+    ),
+    bands AS (
+      SELECT doc_id, dhash, tb.b AS band, (dhash >> (8 * tb.b)) & 255 AS val
+      FROM hashes, (SELECT UNNEST(range(7)) AS b) tb
+    ),
+    cand AS (
+      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+             x.dhash AS ha, y.dhash AS hb
+      FROM bands x
+      JOIN bands y ON x.band = y.band AND x.val = y.val AND x.doc_id < y.doc_id
+    )
+    SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
+    FROM cand WHERE bit_count(xor(ha, hb)) <= {_PHASH_MAX_HAMMING}
+    """
+
+
+@register(
+    "multimodal_phash_neardup",
+    oracle=_phash_oracle(),
+    doc="Image NEAR-duplicate detection over real decoded bytes — the "
+    "multimodal counterpart of dedup_simhash_pairs: decode each P6 "
+    "payload, nearest-sample an 8x8 integer-luma grid, take the 56-bit "
+    "dHash (brighter-than-right-neighbor bits), and pair via "
+    "bit-sampling LSH (7 bands x 8 bits, equi-join on band value, exact "
+    "Hamming verify) — complete recall for hamming <= "
+    f"{_PHASH_MAX_HAMMING} by pigeonhole, never an all-pairs product. "
+    "Every stage is integer arithmetic, so the oracle replays the DECODED "
+    "PIXELS, the resample indexing, the hash bits, and the banded join in "
+    "SQL — the hash values themselves are checked, not just pair counts. "
+    "Fixture: groups of 4 docs share a base image; variants flip two "
+    "source pixels (+128), landing same-base pairs at hamming <= 4 while "
+    "cross-base hashes decorrelate via multiplicative base-cell mixing. "
+    "At production scale the banding widens with the corpus exactly as "
+    "dedup_simhash_pairs documents (wider bands -> finer buckets).",
+    tags=("multimodal", "dedup"),
+)
+def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from slr207_mapreduce_spark.operators.dedup import simhash_band_pairs
+    from slr207_mapreduce_spark.operators.multimodal import (
+        dhash56_features,
+        synth_phash_blobs,
+    )
+
+    d = load_table(spark, "documents", sf_dir)
+    hashes = dhash56_features(synth_phash_blobs(d)).withColumnRenamed(
+        "dhash", "simhash"
+    )
+    return simhash_band_pairs(
+        hashes, max_hamming=_PHASH_MAX_HAMMING, bits=56, bands=7
+    )
+
+
+@register(
+    "multimodal_phash_clusters",
+    oracle=f"""
+    WITH RECURSIVE pairs AS (
+      SELECT doc_a, doc_b FROM ({_phash_oracle()})
+    ),
+    edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION
+      SELECT doc_b, doc_a FROM pairs
+    ),
+    nodes AS (SELECT DISTINCT src AS node FROM edges),
+    reach(node, r) AS (
+      SELECT node, node FROM nodes
+      UNION
+      SELECT e.dst, reach.r
+      FROM reach JOIN edges e ON e.src = reach.node
+    )
+    SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node
+    """,
+    doc="Image duplicate CLUSTERS: the dHash near-dup pairs transitively "
+    "closed into components by min-label propagation (O(diameter) "
+    "rounds, lineage checkpointed) — the pairs -> clusters -> keep-rule "
+    "closure the text (dedup_clusters) and embedding "
+    "(dedup_semantic_clusters) modalities already have, completed for "
+    "the image modality. A real multimodal curation run unions all three "
+    "edge sets before one closure. Oracle: recursive-CTE transitive "
+    "closure over the identical banded-pair SQL.",
+    tags=("multimodal", "dedup", "graph", "iterative"),
+)
+def multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from slr207_mapreduce_spark.operators.graph import connected_components
+
+    pairs = multimodal_phash_neardup(spark, sf_dir)
+    return connected_components(pairs, src="doc_a", dst="doc_b")
+

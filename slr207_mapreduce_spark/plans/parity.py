@@ -1,8 +1,8 @@
-"""Reference-parity queries: the reference's own word-count pipeline run over
-the `documents` table (its text corpus generalized), with the exact §1.3
-semantics. This is the flagship — it exercises every reference operator
-O1-O13 (scan → tokenize/flatMap → filter → shuffle → hash-agg → sort →
-limit → sink) in one declarative plan.
+"""Reference-parity queries (``wordcount_*``): the reference's own word-count
+pipeline run over the `documents` table (its text corpus generalized), with
+the exact §1.3 semantics. This is the flagship — it exercises every
+reference operator O1-O13 (scan → tokenize/flatMap → filter → shuffle →
+hash-agg → sort → limit → sink) in one declarative plan.
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from slr207_mapreduce_spark.parity.wordcount import word_count, word_count_topk
 from slr207_mapreduce_spark.plans.base import register
 from slr207_mapreduce_spark.sources.tables import load_table
+
 
 # The same tokenizer / keep-filter, rendered for DuckDB (RE2). Doubled
 # single-quote escapes the apostrophe inside the SQL literal; \n and \t are
@@ -148,3 +149,4 @@ def q_wordcount_sequential_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, "documents", sf_dir)
     return word_count_sequential_oracle(docs.select(F.col("text").alias("value")))
+

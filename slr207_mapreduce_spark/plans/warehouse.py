@@ -1,37 +1,21 @@
-"""Warehouse-modeling surface, round 2.
+"""Warehouse-modeling queries (``cdc_*``, ``scd2_*``, ``warehouse_*``):
+change-data capture, slowly-changing-dimension history, incremental
+aggregate merge and snapshot diff.
 
 Capability closure of the reference's shuffle+sorted-scan primitives
 (SURVEY.md §2.1): windows = O8 hash shuffle (WorkerSender.java:223-230) +
-O11 per-group ordered scan (ValueThenKeyComparator.java:7-14); the JSON
-and alias queries generalize the per-record map O5-O6
-(WorkerSender.java:129-148,216).
-
-- scd2_user_status_history: slowly-changing-dimension type-2 history built
-  from an event log — change detection via lag(), validity intervals via
-  lead(). The event-sourced MERGE/SCD2 pattern every warehouse needs,
-  expressed as two windows over one shuffle.
-- scalar_lateral_column_alias: lateral column aliases (SELECT a+1 AS x,
-  x*2 AS y in ONE projection) — parser/analyzer surface shared by Spark
-  ≥3.4 and DuckDB; the oracle is the same text modulo dialect.
-- scalar_to_json: JSON GENERATION (to_json over structs/arrays, from_json
-  extraction round-trip). Integer/string payloads only: both engines emit
-  identical compact JSON for those; float formatting would not be
-  portable and is excluded by design (same stance as %f in
-  scalar_format_printf).
+O11 per-group ordered scan (ValueThenKeyComparator.java:7-14). SCD2 history
+is built from an event log — change detection via lag(), validity intervals
+via lead() — two windows over one shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from slr207_mapreduce_spark.plans.base import register
 from slr207_mapreduce_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, name, sf_dir)
 
 
 @register(
@@ -67,7 +51,7 @@ def _t(spark, sf_dir, name):
     tags=("events", "window", "warehouse"),
 )
 def scd2_user_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     changes = (
         e.select("user_id", "ts", "event_id", "event_type", F.lag("event_type").over(w).alias("prev"))
@@ -81,100 +65,6 @@ def scd2_user_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.alias("valid_to"),
         nxt.isNull().alias("is_current"),
     )
-
-
-_LCA_SQL = """
-    SELECT l_orderkey, l_linenumber,
-           l_extendedprice * (1.0 - l_discount) AS gross,
-           gross * (1.0 + l_tax) AS charged,
-           charged - gross AS tax_amount
-    FROM lineitem
-    WHERE l_orderkey % 50 = 0
-"""
-
-
-@register(
-    "scalar_lateral_column_alias",
-    oracle=_LCA_SQL,
-    doc="Lateral column aliases: later select-list items reference earlier "
-    "aliases in the SAME projection (gross -> charged -> tax_amount) — "
-    "analyzer sugar that inlines to one projection node, so the plan is "
-    "identical to writing the expressions out; row-local double math "
-    "(no aggregation) is IEEE-deterministic. Identical query text runs on "
-    "both engines.",
-    tags=("scalar", "sql"),
-)
-def scalar_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(_LCA_SQL)
-
-
-@register(
-    "scalar_to_json",
-    oracle="""
-    SELECT o_orderkey,
-           to_json(struct_pack(k := o_orderkey, status := o_orderstatus,
-                               pri := o_orderpriority)) AS obj_json,
-           to_json([o_orderkey, o_custkey]) AS arr_json,
-           CAST(json_extract(('{"a":' || CAST(o_custkey AS VARCHAR) || '}'), '$.a')
-                AS BIGINT) AS roundtrip_a
-    FROM orders WHERE o_orderkey % 200 = 0
-    """,
-    doc="JSON generation + parse round-trip: to_json over a struct and an "
-    "array (compact `{\"k\":v}` form — byte-identical across engines for "
-    "integer/string payloads; floats excluded by design), and from_json "
-    "pulling a typed field back out. Pure projection at scan speed; the "
-    "serialization shape used by every JSON-lines sink.",
-    tags=("scalar", "json"),
-)
-def scalar_to_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 200 == 0)
-    payload = F.concat(F.lit('{"a":'), F.col("o_custkey").cast("string"), F.lit("}"))
-    schema = StructType([StructField("a", LongType())])
-    return o.select(
-        "o_orderkey",
-        F.to_json(
-            F.struct(
-                F.col("o_orderkey").alias("k"),
-                F.col("o_orderstatus").alias("status"),
-                F.col("o_orderpriority").alias("pri"),
-            )
-        ).alias("obj_json"),
-        F.to_json(F.array(F.col("o_orderkey"), F.col("o_custkey"))).alias("arr_json"),
-        F.from_json(payload, schema).getField("a").alias("roundtrip_a"),
-    )
-
-
-@register(
-    "stat_crosstab",
-    # Column names contain spaces/dashes — quoted aliases on the oracle side
-    # must match Spark's crosstab output exactly (value strings as names).
-    oracle="""
-    SELECT o_orderstatus AS o_orderstatus_o_orderpriority,
-           CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS "1-URGENT",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS BIGINT) AS "2-HIGH",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS BIGINT) AS "3-MEDIUM",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS BIGINT) AS "4-NOT SPECIFIED",
-           CAST(count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS BIGINT) AS "5-LOW"
-    FROM orders
-    GROUP BY o_orderstatus
-    """,
-    doc="df.stat.crosstab: the contingency-table helper (pair frequencies "
-    "pivoted to a matrix). Plans to one groupBy over both keys + a pivot "
-    "— a single shuffle; the oracle is the equivalent FILTER-pivot. The "
-    "df.stat family's deterministic member — freqItems/sampleBy are "
-    "sketch/random-based and live outside the exact gate (the seeded "
-    "hash samplers in pipeline_queries are this engine's deterministic "
-    "sampling path).",
-    tags=("agg", "stat"),
-)
-def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    ct = o.stat.crosstab("o_orderstatus", "o_orderpriority")
-    # crosstab counts come back as long already; column order normalized by
-    # the harness (name-sorted), so only names must match the oracle.
-    return ct
 
 
 @register(
@@ -205,7 +95,7 @@ def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("warehouse", "cdc"),
 )
 def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     ordkey = F.struct(F.col("ts"), F.col("event_id"))
     payload = F.struct(
         F.col("event_type"),
@@ -246,7 +136,7 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("warehouse", "incremental"),
 )
 def warehouse_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", "ts", F.col("value").cast("decimal(18,2)").alias("v")
     )
     cutoff = F.lit("2024-01-15").cast("timestamp")
@@ -305,7 +195,7 @@ def warehouse_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("warehouse", "diff"),
 )
 def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", "ts", F.col("value").cast("decimal(18,2)").alias("v")
     )
     d1 = F.lit("2024-01-11").cast("timestamp")
@@ -331,3 +221,4 @@ def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("changed")
         .alias("change_type"),
     )
+

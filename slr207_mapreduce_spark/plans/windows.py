@@ -1,5 +1,6 @@
-"""Window function coverage (SURVEY.md §2.1 "Window functions" row):
-rank / dense_rank / row_number / lag / lead / running frames / ntile.
+"""Window function queries (``window_*``): SURVEY.md §2.1 "Window functions"
+row — rank / dense_rank / row_number / lag / lead / running, sliding and
+RANGE frames / ntile / share of total.
 
 MapReduce derivation: shuffle on the partition key (reference O8), per-group
 sort (reference O11) and a stateful scan in the reduce (reference O9
@@ -7,7 +8,9 @@ generalized to carry ordered state). Spark: ``Window.partitionBy().orderBy()``
 — one shuffle per distinct partitioning, sort within partitions.
 
 Determinism note: every ORDER BY in a window is made total (unique
-tie-break column) so rank/lag results are engine-independent.
+tie-break column) so rank/lag results are engine-independent. Share
+denominators come from exact DECIMAL window sums so the single division per
+row is bit-stable.
 """
 
 from __future__ import annotations
@@ -18,10 +21,6 @@ from pyspark.sql import functions as F
 from slr207_mapreduce_spark.functions.portable import dec
 from slr207_mapreduce_spark.plans.base import register
 from slr207_mapreduce_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, name, sf_dir)
 
 
 @register(
@@ -76,7 +75,7 @@ def window_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window",),
 )
 def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_totalprice") > 400000)
     w_rnk = Window.partitionBy("o_orderpriority").orderBy(
         F.asc("o_orderdate"), F.asc("o_orderkey")
     )
@@ -105,7 +104,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "events"),
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     prev_ts = F.lag("ts").over(w)
     return e.select(
@@ -140,7 +139,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "frame"),
 )
 def window_running_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
@@ -170,7 +169,7 @@ def window_running_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "frame"),
 )
 def window_sliding_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").where(F.col("l_suppkey") <= 3)
+    l = load_table(spark, "lineitem", sf_dir).where(F.col("l_suppkey") <= 3)
     w = (
         Window.partitionBy("l_suppkey")
         .orderBy(F.asc("l_shipdate"), F.asc("l_orderkey"), F.asc("l_linenumber"))
@@ -207,7 +206,7 @@ def window_sliding_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slr207_mapreduce_spark.operators.ids import assign_sequential_ids
 
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_custkey", F.col("c_acctbal").cast("double").alias("c_acctbal")
     )
     ranked = assign_sequential_ids(
@@ -257,7 +256,7 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window",),
 )
 def window_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 17 == 0)
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_orderkey") % 17 == 0)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         o.select(
@@ -297,7 +296,7 @@ def window_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("window",),
 )
 def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 23 == 0)
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_orderkey") % 23 == 0)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
@@ -311,3 +310,116 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("o_orderpriority", "o_totalprice", "o_orderkey")
     )
+
+
+@register(
+    "window_count_distinct_frame",
+    oracle="""
+    SELECT o_custkey, o_orderkey,
+           CAST(COUNT(DISTINCT o_orderpriority) OVER (
+             PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             AS distinct_priorities_so_far
+    FROM orders
+    WHERE o_custkey % 20 = 0
+    """,
+    doc="COUNT(DISTINCT) OVER a running frame — Spark's window operator "
+    "rejects DISTINCT aggregates, so the engine expresses it as "
+    "size(collect_set() OVER frame): semantically identical (set "
+    "cardinality per frame) and still a single window pass. The "
+    "per-frame set is bounded by the distinct-value domain (5 "
+    "priorities), so state stays O(domain), not O(frame) — the right "
+    "mental model for running-distinct at 100 TB; for unbounded domains "
+    "switch to the HLL sketch column (agg_hll_mergeable_sketches).",
+    tags=("window", "distinct"),
+)
+def window_count_distinct_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_custkey") % 20 == 0)
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.size(F.collect_set("o_orderpriority").over(w))
+        .cast("long")
+        .alias("distinct_priorities_so_far"),
+    )
+
+
+@register(
+    "window_share_of_total",
+    oracle="""
+    SELECT o_orderkey, o_orderstatus, o_totalprice,
+           CAST(o_totalprice AS DOUBLE)
+             / CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER () AS DOUBLE) AS share_of_total,
+           CAST(o_totalprice AS DOUBLE)
+             / CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
+                    OVER (PARTITION BY o_orderstatus) AS DOUBLE) AS share_of_status
+    FROM orders
+    WHERE o_orderkey % 20 = 0
+    """,
+    doc="Ratio-to-report: each order's share of the global and of its "
+    "status-group revenue via unbounded window sums (exact DECIMAL "
+    "denominators -> one IEEE division per row). The global window is a "
+    "single-partition pass — fine here because the filtered input is "
+    "bounded; at fact scale the global denominator should come from a "
+    "scalar-subquery aggregate instead (one extra reduction, no "
+    "single-partition window), same result by exactness.",
+    tags=("window", "analytics"),
+)
+def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_orderkey") % 20 == 0)
+    w_all = Window.partitionBy()
+    w_status = Window.partitionBy("o_orderstatus")
+    price = F.col("o_totalprice").cast("double")
+    return o.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        (price / F.sum(dec("o_totalprice")).over(w_all).cast("double")).alias(
+            "share_of_total"
+        ),
+        (price / F.sum(dec("o_totalprice")).over(w_status).cast("double")).alias(
+            "share_of_status"
+        ),
+    )
+
+
+@register(
+    "window_numeric_range_frame",
+    oracle="""
+    SELECT o_orderkey, o_orderstatus, o_totalprice,
+           CAST(count(*) OVER w AS BIGINT) AS n_within_1k,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER w AS DOUBLE) AS sum_within_1k
+    FROM orders
+    WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice ASC
+                 RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW)
+    """,
+    doc="RANGE frame over a NUMERIC ordering column: each order sees the "
+    "peers within $1000 below it — value-distance framing, peer-inclusive "
+    "(ties share a frame), vs the positional ROWS frames. Completes the "
+    "frame matrix with window_running/sliding_frame (ROWS) and "
+    "events_range_frame_1h (time RANGE). Frame sums go through exact "
+    "DECIMAL; one shuffle on the partition key.",
+    tags=("window",),
+)
+def window_numeric_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, "orders", sf_dir)
+    w = (
+        Window.partitionBy("o_orderstatus")
+        .orderBy(F.asc("o_totalprice"))
+        .rangeBetween(-1000, Window.currentRow)
+    )
+    return o.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.count("*").over(w).alias("n_within_1k"),
+        F.sum(dec("o_totalprice")).over(w).cast("double").alias("sum_within_1k"),
+    )
+

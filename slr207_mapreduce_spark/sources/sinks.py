@@ -40,6 +40,18 @@ def write_table(
     writer.save(path)
 
 
+def zorder_expr(a: str, b: str, bits: int = 10) -> str:
+    """Morton interleave of the low ``bits`` bits of ``a`` (even lanes) and
+    ``b`` (odd lanes) as one shared SQL text: Spark SQL and DuckDB parse
+    `>> << & %` identically, and the summed terms occupy disjoint bits so
+    ``+`` is ``|``."""
+    terms = [
+        f"((({a} >> {i}) & 1) << {2 * i}) + ((({b} >> {i}) & 1) << {2 * i + 1})"
+        for i in range(bits)
+    ]
+    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -66,8 +78,6 @@ def write_zordered(
     ``F.floor(col / width)``. The helper column is dropped before writing.
     """
     from pyspark.sql import functions as F
-
-    from slr207_mapreduce_spark.plans.analytics_r4c import zorder_expr
 
     hi = (1 << bits) - 1
     zk = zorder_expr(

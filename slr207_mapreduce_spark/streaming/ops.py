@@ -82,7 +82,7 @@ def streaming_countmin_counters(
     sketch's counters are additive SUMs keyed by (window, row, bucket),
     so Structured Streaming's incremental aggregation IS the sketch
     update and partial-agg merge is the sketch merge; the batch analogue
-    (events_countmin_trending_daily, plans/analytics_r5.py) builds
+    (events_countmin_trending_daily, plans/events.py) builds
     byte-identical counters, pinned by tests/test_streaming.py.
 
     Geometry defaults come from the SHARED constants in

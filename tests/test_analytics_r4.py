@@ -1,5 +1,5 @@
-"""Property tests for plans/analytics_r4.py — invariants the oracle
-equality can't express: LSH lower-bound on agreement, BPE greedy-merge
+"""Property tests for analytics queries across several families — invariants
+the oracle equality can't express: LSH lower-bound on agreement, BPE greedy-merge
 semantics, novelty extremes, outlier ranking shape."""
 
 from __future__ import annotations
@@ -144,7 +144,7 @@ def test_hll_registers_merge_by_max(spark):
     equal the registers built over the whole input."""
     from pyspark.sql import functions as F
 
-    from slr207_mapreduce_spark.plans.analytics_r4 import hll_registers
+    from slr207_mapreduce_spark.plans.aggregates import hll_registers
     from slr207_mapreduce_spark.sources.tables import load_table
 
     o = load_table(spark, "orders", SF_CORRECT)
@@ -386,7 +386,7 @@ def test_capped_sessionization_splits_on_cap_not_just_gap(spark):
     cap must still split the stream into bounded sessions."""
     import datetime as dt
 
-    from slr207_mapreduce_spark.plans.analytics_r4d import (
+    from slr207_mapreduce_spark.plans.events import (
         _SESS_SCHEMA,
         _cap_sessions_fn,
     )

@@ -1,4 +1,4 @@
-"""Property tests for the round-11b additions (plans/analytics_r5.py) —
+"""Property tests for the count-min, PPS-sampling and pHash queries —
 invariants the oracle equality can't express: the count-min one-sided
 error guarantee over the WHOLE vocabulary, sketch mergeability across
 disjoint corpus halves, PPS partition-invariance and weight
@@ -26,7 +26,7 @@ def test_countmin_never_undercounts_any_term(spark):
     from pyspark.sql import functions as F
 
     from slr207_mapreduce_spark.functions.portable import countmin_hash_rows
-    from slr207_mapreduce_spark.plans.analytics_r5 import (
+    from slr207_mapreduce_spark.plans.text import (
         _CM_DEPTH,
         _CM_SEED0,
         _CM_WIDTH,
@@ -79,7 +79,7 @@ def test_countmin_sketch_merges_across_corpus_halves(spark):
     from pyspark.sql import functions as F
 
     from slr207_mapreduce_spark.functions.portable import countmin_hash_rows
-    from slr207_mapreduce_spark.plans.analytics_r5 import (
+    from slr207_mapreduce_spark.plans.text import (
         _CM_DEPTH,
         _CM_SEED0,
         _CM_WIDTH,
@@ -137,7 +137,7 @@ def test_pps_sample_partition_invariant_and_weight_proportional(spark, qs):
     total_hits = sum(r["n_hits"] for r in rows)
     # systematic sampling draws floor/ceil of k points depending on the
     # anchor's position in the final partial interval
-    from slr207_mapreduce_spark.plans.analytics_r5 import _PPS_K
+    from slr207_mapreduce_spark.plans.pipeline import _PPS_K
 
     assert _PPS_K - 1 <= total_hits <= _PPS_K + 1
     import duckdb

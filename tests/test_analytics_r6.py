@@ -15,8 +15,8 @@ def test_crossmodal_dedup_merges_every_modality(spark):
     over the same nodes, since the union can only add edges)."""
     from slr207_mapreduce_spark.operators.dedup import minhash_lsh_candidates
     from slr207_mapreduce_spark.operators.similarity import cosine_neardup_pairs
-    from slr207_mapreduce_spark.plans.analytics_r5 import multimodal_phash_neardup
     from slr207_mapreduce_spark.plans.base import all_queries
+    from slr207_mapreduce_spark.plans.multimodal import multimodal_phash_neardup
     from slr207_mapreduce_spark.sources.tables import load_table
 
     out = all_queries()["pipeline_crossmodal_dedup"].build(spark, SF_SMOKE)
@@ -125,8 +125,8 @@ def test_semdedup_drops_minority_within_cells_only(spark):
     doc appears exactly once, and a dropped doc always has a smaller-id
     neighbor in ITS OWN cell at cosine >= tau (spot-verified on the
     smallest cells)."""
-    from slr207_mapreduce_spark.plans.analytics_r6 import _SEMDEDUP_TAU
     from slr207_mapreduce_spark.plans.base import all_queries
+    from slr207_mapreduce_spark.plans.dedup import _SEMDEDUP_TAU
     from slr207_mapreduce_spark.sources.tables import load_table
 
     e = load_table(spark, "embeddings", SF_SMOKE)
@@ -235,12 +235,12 @@ def test_countmin_streaming_defaults_track_shared_geometry():
         COUNTMIN_EVENTS_WIDTH,
         COUNTMIN_SEED0,
     )
-    from slr207_mapreduce_spark.plans import analytics_r5
+    from slr207_mapreduce_spark.plans import events
     from slr207_mapreduce_spark.streaming.ops import streaming_countmin_counters
 
-    assert analytics_r5._ECM_DEPTH is COUNTMIN_EVENTS_DEPTH
-    assert analytics_r5._ECM_WIDTH is COUNTMIN_EVENTS_WIDTH
-    assert analytics_r5._CM_SEED0 is COUNTMIN_SEED0
+    assert events._ECM_DEPTH is COUNTMIN_EVENTS_DEPTH
+    assert events._ECM_WIDTH is COUNTMIN_EVENTS_WIDTH
+    assert events._CM_SEED0 is COUNTMIN_SEED0
     sig = inspect.signature(streaming_countmin_counters)
     # None-defaults resolve to the shared constants inside the function
     assert sig.parameters["depth"].default is None

@@ -74,9 +74,8 @@ def test_cosine_pairs_exact_matches_numpy_and_excludes_invalid(spark):
 def test_semdedup_recall_report_is_internally_consistent(spark):
     """within + cross == exact per tau; recall in [0, 1] or NULL exactly
     when exact == 0; taus cover the shipped operator threshold."""
-    from slr207_mapreduce_spark.plans.analytics_r6 import _SEMDEDUP_TAU
-    from slr207_mapreduce_spark.plans.analytics_r7 import _RECALL_TAUS
     from slr207_mapreduce_spark.plans.base import all_queries
+    from slr207_mapreduce_spark.plans.dedup import _RECALL_TAUS, _SEMDEDUP_TAU
 
     assert _SEMDEDUP_TAU in _RECALL_TAUS
     rows = (
@@ -98,7 +97,7 @@ def test_crossmodal_materialized_matches_from_raw(spark):
     the query-from-raw closure (they share one oracle — this is the
     engine-side pin), and its staging write must be laid out partitioned
     by modality so a single-modality consumer gets partition pruning."""
-    from slr207_mapreduce_spark.plans.analytics_r7 import (
+    from slr207_mapreduce_spark.plans.pipeline import (
         _crossmodal_edges_path,
     )
     from slr207_mapreduce_spark.plans.base import all_queries

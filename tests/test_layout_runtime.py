@@ -62,7 +62,7 @@ def test_zorder_layout_tightens_both_dims(spark, tmp_path):
     full-width in the other. Narrow spans ARE the pruning mechanism: a
     range predicate on either column skips files whose stats don't overlap.
     """
-    from slr207_mapreduce_spark.plans.analytics_r4c import zorder_expr
+    from slr207_mapreduce_spark.sources.sinks import zorder_expr
     from slr207_mapreduce_spark.sources.tables import load_table
 
     li = (
@@ -265,7 +265,7 @@ def test_zorder_key_roundtrip_random(spark):
     is information-preserving over the masked domain)."""
     import random
 
-    from slr207_mapreduce_spark.plans.analytics_r4c import zorder_expr
+    from slr207_mapreduce_spark.sources.sinks import zorder_expr
 
     rng = random.Random(7)
     rows = [(rng.randrange(1024), rng.randrange(1024)) for _ in range(200)]
@@ -392,7 +392,7 @@ def test_write_zordered_clamps_instead_of_wrapping(spark, tmp_path):
     a z-key (the wraparound aliased distant values into the same cell and
     silently destroyed pruning), and clamped keys sort at/after every
     in-range key."""
-    from slr207_mapreduce_spark.plans.analytics_r4c import zorder_expr
+    from slr207_mapreduce_spark.sources.sinks import zorder_expr
 
     hi = 1023
     rows = [(5, 7), (5 + 1024, 7), (hi, 7), (hi + 999_999, 7), (-3, 7)]

@@ -274,7 +274,7 @@ def test_count_min_sketch_guarantees_and_merge(spark):
     land, no JVM sketch binaries."""
     import pyspark.sql.functions as F
     from tests.conftest import SF_CORRECT
-    from slr207_mapreduce_spark.plans.agg_r2 import cms_table
+    from slr207_mapreduce_spark.plans.aggregates import cms_table
     from slr207_mapreduce_spark.plans.base import all_queries
     from slr207_mapreduce_spark.sources.tables import load_table
 

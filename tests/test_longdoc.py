@@ -2,7 +2,7 @@
 
 The sf corpora cap documents at ~100 tokens, so the multi-chunk / fan-out /
 prefix-sum branches of the long-doc operators — chunking
-(plans/pipeline_r3.py), packing (operators/ids.py::with_running_total), the
+(plans/pipeline.py), packing (operators/ids.py::with_running_total), the
 Gopher repetition gate, and MinHash LSH — had oracle pressure only from the
 short-doc regime. This module builds a deterministic synthetic corpus with
 SKEWED lengths (5 .. 100k tokens/doc, chunk-boundary edge lengths, embedded
@@ -193,7 +193,7 @@ def test_chunk_oracle_property_matches_naive_python():
     from hypothesis import strategies as st
 
     from slr207_mapreduce_spark.plans.base import all_queries
-    from slr207_mapreduce_spark.plans.pipeline_r3 import CHUNK_STRIDE, CHUNK_TOKENS
+    from slr207_mapreduce_spark.plans.pipeline import CHUNK_STRIDE, CHUNK_TOKENS
 
     oracle = all_queries()["pipeline_chunk_documents"].oracle
 

@@ -1,5 +1,5 @@
 """Semantics and plan pins for the training-data-pipeline family
-(plans/pipeline_queries.py). Values are oracle-checked by test_oracle.py;
+(plans/pipeline.py). Values are oracle-checked by test_oracle.py;
 these pin the properties the hash gate can't see: determinism across runs,
 cap/fraction invariants, contamination ground truth, and the
 stateless-vs-window scale split.
@@ -39,7 +39,7 @@ def test_fractional_sample_is_stateless_and_deterministic(spark):
     assert a == b and len(a) > 0
     # drop the presentation orderBy: the sampling itself must be a pure map
     d = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-    from slr207_mapreduce_spark.plans.pipeline_queries import _doc_bucket
+    from slr207_mapreduce_spark.plans.pipeline import _doc_bucket
 
     core = d.where(_doc_bucket() < 10).select("doc_id")
     assert "Exchange" not in _plan(core)
@@ -339,7 +339,7 @@ def test_chunk_documents_overlap_boundaries(spark):
     """Boundary math on synthetic docs whose token counts straddle the
     256-window / 192-stride edges (the sf corpora are all single-chunk,
     so the oracle gate never exercises multi-chunk fan-out)."""
-    from slr207_mapreduce_spark.plans.pipeline_r3 import (
+    from slr207_mapreduce_spark.plans.pipeline import (
         CHUNK_STRIDE,
         CHUNK_TOKENS,
         pipeline_chunk_documents,
@@ -391,7 +391,7 @@ def test_global_shuffle_deterministic_and_dense(spark):
 
 def test_soundex_sql_property_matches_python():
     """Property test: the DuckDB SQL soundex powering the phonetic-blocking
-    oracle (pipeline_r2.soundex_coded_cte_sql) agrees with the independent
+    oracle (pipeline.soundex_coded_cte_sql) agrees with the independent
     Python Russell soundex on arbitrary lowercase words — not just the
     part-name vocabulary. Spark's soundex is pinned against the same Python
     implementation above, so all three implementations agree transitively."""
@@ -399,7 +399,7 @@ def test_soundex_sql_property_matches_python():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from slr207_mapreduce_spark.plans.pipeline_r2 import soundex_coded_cte_sql
+    from slr207_mapreduce_spark.plans.pipeline import soundex_coded_cte_sql
 
     con = duckdb.connect()
 

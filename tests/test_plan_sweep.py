@@ -38,7 +38,7 @@ from collections import Counter
 from tests.conftest import SF_SMOKE
 
 # Queries whose point is the row-at-a-time Python UDF/UDTF surface itself
-# (plans/udf_queries.py, plans/udtf_queries.py) — everything else must not
+# (plans/scalars.py) — everything else must not
 # fall off the vectorized path.
 PY_UDF_ALLOWED = {"udf_encode_tokens", "udtf_positioned_words"}
 

@@ -99,11 +99,11 @@ def test_scaling_tables_not_broadcast(spark):
     plan for ResolvedHint only below scaling-table scans."""
     import re
 
-    from slr207_mapreduce_spark.plans import tpch, tpch_extra, subqueries, joins
+    from slr207_mapreduce_spark.plans import relational, tpch
 
     import inspect
 
-    for mod in (tpch, tpch_extra, subqueries, joins):
+    for mod in (tpch, relational):
         src = inspect.getsource(mod)
         for m in re.finditer(r"F\.broadcast\((\w+)\)", src):
             var = m.group(1)
@@ -177,3 +177,58 @@ def test_plans_md_matches_plans(spark):
         ]
     sf01 = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")
     assert audit_rows(spark, sf01) == committed
+
+
+# Query-name prefix -> the plan module of its family (``q<N>_`` is TPC-H).
+_FAMILY_MODULES = {
+    "q<N>": "tpch",
+    "wordcount": "parity",
+    "agg": "aggregates",
+    "stats": "aggregates",
+    "stat": "aggregates",
+    "estimator": "aggregates",
+    "window": "windows",
+    "join": "relational",
+    "setop": "relational",
+    "subq": "relational",
+    "pivot": "relational",
+    "unpivot": "relational",
+    "asof": "relational",
+    "scalar": "scalars",
+    "udf": "scalars",
+    "udtf": "scalars",
+    "events": "events",
+    "cdc": "warehouse",
+    "scd2": "warehouse",
+    "warehouse": "warehouse",
+    "text": "text",
+    "dedup": "dedup",
+    "semdedup": "dedup",
+    "knn": "ann",
+    "embedding": "ann",
+    "retrieval": "ann",
+    "graph": "graph",
+    "pipeline": "pipeline",
+    "multimodal": "multimodal",
+}
+
+
+def test_query_lives_in_its_family_module():
+    """plans/ is grouped by operator family: every registered query is built
+    in the module its name prefix maps to, and the package holds only those
+    modules plus the registry plumbing."""
+    import pkgutil
+    import re
+
+    from slr207_mapreduce_spark import plans
+    from slr207_mapreduce_spark.plans.base import all_queries
+
+    misplaced = {}
+    for name, spec in all_queries().items():
+        prefix = "q<N>" if re.match(r"q\d+_", name) else name.split("_")[0]
+        want = f"slr207_mapreduce_spark.plans.{_FAMILY_MODULES.get(prefix)}"
+        if spec.build.__module__ != want:
+            misplaced[name] = spec.build.__module__
+    assert not misplaced, misplaced
+    modules = {m.name for m in pkgutil.iter_modules(plans.__path__)}
+    assert modules == set(_FAMILY_MODULES.values()) | {"base"}

@@ -176,7 +176,7 @@ def test_bucketed_inverted_index_prunes_buckets(spark):
 
 
 def test_bucketed_band_table_joins_without_corpus_shuffle(spark):
-    """The incremental-dedup scale contract (pipeline_r4): the corpus LSH
+    """The incremental-dedup scale contract (pipeline_incremental_dedup): the corpus LSH
     band table is precomputed and stored BUCKETED by (band, bkey), so a
     new-batch probe join shuffles only the batch side — the corpus is
     never reshuffled per ingest. Pin: exactly one Exchange in the join
@@ -283,7 +283,7 @@ def test_capped_sessionization_segmented_matches_loop_on_heavy_hitter(spark):
     import time
 
     from slr207_mapreduce_spark.operators.skew import capped_sessions_segmented
-    from slr207_mapreduce_spark.plans.analytics_r4d import (
+    from slr207_mapreduce_spark.plans.events import (
         _SESS_SCHEMA,
         _cap_sessions_fn,
     )

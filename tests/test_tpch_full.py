@@ -1,5 +1,5 @@
 """Plan-shape and semantic pins for the Q2/Q8/Q9/Q11/Q13/Q17/Q18/Q20/Q21
-module (plans/tpch_full.py). Value correctness is covered by
+queries (plans/tpch.py). Value correctness is covered by
 tests/test_oracle.py (every registered query runs against DuckDB); these
 tests pin the scale-relevant plan properties and the outer-join/semi-join
 semantics that exact-match oracles can mask.

@@ -108,7 +108,7 @@ def generate(src: str, out: str, mult: int) -> None:
     )
     # Per-(vec_id, copy, dim) jitter: md5 hex -> int -> uniform grid on
     # [-0.25, 0.25] in exact 1e-6 steps (the same fixed-point discipline as
-    # analytics_r4d.py's JL projection — every value is N * 1e-6 for an
+    # knn_jl_rerank's JL projection — every value is N * 1e-6 for an
     # integer N, so the parquet bytes are engine- and platform-exact).
     # 0.25 = 2x the source component std (unit vectors, 64 dims, std 1/8),
     # which pushes replica cosine from ~1.0 (clone artifact) to ~0.6.

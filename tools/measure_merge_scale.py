@@ -53,7 +53,7 @@ def main() -> int:
         merge_trained_cells,
         norm_f64,
     )
-    from slr207_mapreduce_spark.plans.analytics_r6 import _SEMDEDUP_TAU
+    from slr207_mapreduce_spark.plans.dedup import _SEMDEDUP_TAU
     from slr207_mapreduce_spark.session import get_session
     from slr207_mapreduce_spark.sources.tables import load_table
     from slr207_mapreduce_spark.streaming.ops import (
