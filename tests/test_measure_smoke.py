@@ -83,34 +83,3 @@ def test_day_chunks_reuse_requires_matching_max_days(tmp_path):
     assert full == 30
     assert _day_chunks(src, out, max_days=3) == 3  # and back
 
-
-def test_aba_pass_smoke():
-    """tools/aba.py (the interleaved-ABA unit bench.py shells out to when
-    the stable-window retry budget exhausts, r13) must run a pass against
-    an explicit --root and print one parseable JSON line with per-query
-    and total walls. The full A/B interleave is exercised by bench.py
-    itself; this pins the subprocess contract it depends on."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    p = subprocess.run(
-        [
-            _sys.executable,
-            os.path.join(REPO, "tools", "aba.py"),
-            "--root", REPO,
-            "--sf", SF_SMOKE,
-            "--cpus", "4",
-            "--timed", "1",
-            "q1_pricing_summary",
-            "wordcount_topk",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        check=True,
-    )
-    res = json.loads(p.stdout.strip().splitlines()[-1])
-    assert set(res["queries"]) == {"q1_pricing_summary", "wordcount_topk"}
-    assert all(t > 0 for t in res["queries"].values())
-    assert res["total"] >= max(res["queries"].values())

@@ -10,8 +10,8 @@ Usage:
     python tools/explain_dump.py --out plans/r15 --suffix before \
         [--sf /root/testdata/sf0.1] [query ...]
 
-With no query names, dumps the bench headline set plus the sf1/longdoc/
-codec tier sets (each against its own data directory, like bench.py).
+With no query names, dumps bench.py's headline set plus every set in its
+TIERS table, each against the data directory bench.py times it on.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ def main() -> int:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    from bench import BENCH_QUERIES
+    from bench import BENCH_QUERIES, TIERS
     from slr207_mapreduce_spark.plans.base import all_queries, plan_only
     from slr207_mapreduce_spark.session import get_session
 
@@ -46,48 +46,19 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
 
-    # (query, sf_dir) pairs: explicit names use --sf; the default set
-    # mirrors bench.py's tiers, each against the directory it is timed on.
-    work: list[tuple[str, str]] = []
+    # (query, sf_dir) pairs: explicit names use --sf; the default set is
+    # bench.py's, each tier against the directory it is timed on.
     if args.queries:
         work = [(q, args.sf) for q in args.queries]
     else:
         work = [(q, args.sf) for q in BENCH_QUERIES]
-        try:
-            from tools.make_sf import ensure_longdoc, ensure_sf1
-
-            sf1_dir = ensure_sf1(REPO)
-            ld_dir = ensure_longdoc(REPO)
-            work += [
-                (q, sf1_dir)
-                for q in (
-                    "knn_lsh_bucketed",
-                    "pipeline_assign_ids",
-                    "pipeline_global_shuffle",
-                )
-            ]
-            work += [
-                (q, ld_dir)
-                for q in (
-                    "pipeline_chunk_documents",
-                    "pipeline_pack_sequences",
-                    "dedup_cdc_chunks",
-                    "text_bpe_apply",
-                    "text_lm_score",
-                )
-            ]
-        except Exception as e:  # tiers are optional for a plan dump
-            print(f"tier dirs unavailable: {e}", file=sys.stderr)
-        work += [
-            (q, args.sf)
-            for q in (
-                "multimodal_jpeg_roundtrip",
-                "multimodal_jpeg_color_roundtrip",
-                "multimodal_mjpeg_avi_roundtrip",
-                "multimodal_mulaw_roundtrip",
-                "multimodal_gif_roundtrip",
-            )
-        ]
+        for tier, (data_dir, _runs, queries) in TIERS.items():
+            try:
+                tier_dir = data_dir(args.sf)
+            except Exception as e:  # tiers are optional for a plan dump
+                print(f"{tier} data unavailable: {e}", file=sys.stderr)
+                continue
+            work += [(q, tier_dir) for q in queries]
 
     os.makedirs(args.out, exist_ok=True)
     seen: set[str] = set()
