@@ -7,13 +7,16 @@ stdout tail parses):
    "queries": {name: sec, ...}, "sf": <float>, "value_median": <total sec>,
    "tiers": {tier: <total sec> | null, ...}, "detail": "..."}
 
-Every set is timed the same way: each query runs once to warm (JVM JIT,
-parquet footers, codegen), then `runs` times; a query's time is the min of
-its runs (anything above it is scheduler/GC jitter) and the median rides
-along. Each run materializes the query through the `noop` sink — full
-computation, no driver-side collection cost, no column-pruning shortcut a
-count() would take. A/B comparisons between trees are perfbench's job
-(`perfbench/run.py`); this script only times the tree it runs in.
+Every set is timed the same way: the set runs WARM_PASSES times to warm
+(JVM JIT, parquet footers, codegen), then each query `runs` times; a
+query's time is the min of its runs (anything above it is scheduler/GC
+jitter) and the median rides along, as does `codegen_compiles`, the
+classes compiled during the timed runs (0 once the generated-class cache
+holds the set). Each run materializes the query through the `noop` sink —
+full computation, no driver-side collection cost, no column-pruning
+shortcut a count() would take. A/B comparisons between trees are
+perfbench's job (`perfbench/run.py`); this script only times the tree it
+runs in.
 """
 
 from __future__ import annotations
@@ -45,6 +48,11 @@ BENCH_QUERIES = [
     "knn_bruteforce",
 ]
 HEADLINE_RUNS = 5
+# Untimed passes over a set before its timed runs. With one, the next
+# headline set timed in the same session still read 9% faster (sf0.1,
+# 4 cores: 4.878, 4.461, 4.444 s); pass by pass the headline read 23.4,
+# 8.0, then 4.0-4.9 s with no trend from the third pass on.
+WARM_PASSES = 2
 
 
 def _sf1_dir(sf_dir: str) -> str:
@@ -113,18 +121,29 @@ TIERS = {
 }
 
 
+def codegen_compiles(spark) -> int:
+    """Classes whole-stage and expression codegen have compiled in this
+    JVM so far (driver and local executors share it)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def time_set(spark, specs, data_dir: str, queries: list[str], runs: int) -> dict:
-    """Warm every query once, then time each `runs` times; return the
-    set's per-query mins, medians and sorted run lists, and their totals."""
+    """Warm the set WARM_PASSES times, then time each query `runs` times;
+    return the set's per-query mins, medians and sorted run lists, their
+    totals, and the classes compiled during the timed runs."""
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
         specs[name].build(spark, data_dir).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
-    for name in queries:
-        run(name)
+    for _ in range(WARM_PASSES):
+        for name in queries:
+            run(name)
+    compiled = codegen_compiles(spark)
     walls = {name: sorted(round(run(name), 3) for _ in range(runs)) for name in queries}
+    compiled = codegen_compiles(spark) - compiled
     mins = {name: w[0] for name, w in walls.items()}
     medians = {name: w[len(w) // 2] for name, w in walls.items()}
     return {
@@ -135,6 +154,7 @@ def time_set(spark, specs, data_dir: str, queries: list[str], runs: int) -> dict
         "value_median": round(sum(medians.values()), 3),
         "runs_per_query": runs,
         "runs": walls,
+        "codegen_compiles": compiled,
     }
 
 

@@ -853,7 +853,7 @@ def scalar_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- row-at-a-time UDF hosting the reference's encode() --------------------
 
-_encode_udf = F.udf(py_encode, StringType())
+_encode_udf = F.udf(py_encode, StringType(), useArrow=False)
 
 _ENCODE_SQL = (
     "array_to_string(list_transform(string_split(lower(word), ''), "

@@ -4,8 +4,9 @@ The reference hand-rolls its runtime (SSH deploy, NIO sockets, sleeps —
 /root/reference/deploy.sh:21-34, ListenerReducer.java:183-338). Spark
 replaces all of that; what remains for us is config hygiene: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), sensible shuffle
-parallelism, Arrow for any pandas exchange, and a fixed UTC session timezone
-so timestamp semantics are reproducible against the DuckDB oracle.
+parallelism, Arrow for any pandas exchange, a generated-class cache sized to
+the registry, and a fixed UTC session timezone so timestamp semantics are
+reproducible against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -104,6 +105,17 @@ SCALE_DEFAULTS: dict[str, str] = {
     # under STAGE_MATERIALIZATION). Derived from detected RAM (~20%,
     # capped at 24g) so smaller hosts don't overcommit.
     "spark.driver.memory": _default_driver_memory(),
+    # Generated-class cache, sized to the registry's working set. Spark's
+    # default keeps 100 compiled classes, LRU; the 12 headline queries
+    # generate ~183 distinct classes at sf0.01 (141 for perfbench's sf1
+    # set) and one pass over all 278 queries ~2,664, so at the default
+    # Janino recompiled 117-170 headline classes on every later pass
+    # (0.4-0.75 s of compile per pass) and ~3,631 on a registry pass.
+    # 4096 holds a full registry pass with ~50% headroom. A static SQL
+    # conf: it takes effect only when a fresh JVM starts. It caches
+    # compiled code, never query results, and the cache is keyed by the
+    # generated source, so a hit cannot change an answer.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # columnar shuffle/storage stay default; whole-stage codegen is on by default
 }
 

@@ -39,3 +39,5 @@ def test_bench_prints_detail_then_compact_line(spark, monkeypatch, capsys):
     assert final["tiers"]["bad"] is None
     assert set(detail["bad"]) == {"error"}
     assert detail["runs_per_query"] == bench.HEADLINE_RUNS
+    for compiles in (detail["codegen_compiles"], detail["here"]["codegen_compiles"]):
+        assert isinstance(compiles, int) and compiles >= 0

@@ -9,6 +9,10 @@ partial (map-side combine — the reference's biggest missing optimization).
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,3 +236,22 @@ def test_query_lives_in_its_family_module():
     assert not misplaced, misplaced
     modules = {m.name for m in pkgutil.iter_modules(plans.__path__)}
     assert modules == set(_FAMILY_MODULES.values()) | {"base"}
+
+
+def test_registry_import_raises_no_user_warning():
+    """Importing the registry warns nothing, and the row-at-a-time encode
+    UDF keeps its eval type. A fresh interpreter, because the registry is
+    imported once per process."""
+    code = (
+        "from pyspark.util import PythonEvalType\n"
+        "from slr207_mapreduce_spark.plans.base import all_queries\n"
+        "from slr207_mapreduce_spark.plans.scalars import _encode_udf\n"
+        "all_queries()\n"
+        "assert _encode_udf.evalType == PythonEvalType.SQL_BATCHED_UDF\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c", code],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
