@@ -33,17 +33,6 @@ def dot_f64(a: Column, b: Column) -> Column:
     )
 
 
-def dot_f64_expr(a: str, b: str) -> str:
-    """SQL-string rendering of :func:`dot_f64` — the same Catalyst tree
-    parsed JVM-side in one round trip (hot-path builders use this form;
-    Python-lambda HOF construction costs several py4j calls per lambda)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
 def norm_f64(a: Column) -> Column:
     return F.sqrt(dot_f64(a, a))
 

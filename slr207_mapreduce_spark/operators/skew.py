@@ -10,8 +10,6 @@ session.py); this module covers the cases AQE can't fix:
   hot key. The left side gets a random-ish (hash-derived, deterministic)
   salt in [0, n); the right side is replicated n× with every salt value;
   the join key becomes (key, salt) so one hot key spreads over n tasks.
-- ``repartition_by``: explicit pre-shuffle to co-locate several downstream
-  wide ops on one partitioning (pay one shuffle instead of three).
 - bucketed writes live in sources/sinks.py (bucketBy) — co-located joins
   with zero runtime shuffle for repeated join keys.
 """
@@ -113,15 +111,6 @@ def _parquet_row_group_parallelism(df: DataFrame) -> int | None:
         return total
     except Exception:
         return None
-
-
-def repartition_by(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
-    """Explicit hash re-partitioning to co-locate downstream wide ops
-    (joins/aggs on the same key reuse the exchange instead of re-shuffling).
-    """
-    if n is not None:
-        return df.repartition(n, *[F.col(c) for c in cols])
-    return df.repartition(*[F.col(c) for c in cols])
 
 
 def explain_shuffles(df: DataFrame) -> int:

@@ -481,6 +481,10 @@ def events_range_frame_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).withColumn("es", _epoch_s())
+    # Limit: the collect_list buffers keep EVERY click and purchase
+    # timestamp of one user, so one user's funnel events must fit in one
+    # aggregation buffer (one task's memory); a heavy-hitter user does not
+    # spread across tasks.
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("es"))).alias("t1"),
         F.collect_list(

@@ -6,7 +6,8 @@ replaces all of that; what remains for us is config hygiene: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), sensible shuffle
 parallelism, Arrow for any pandas exchange, a generated-class cache sized to
 the registry, and a fixed UTC session timezone so timestamp semantics are
-reproducible against the DuckDB oracle.
+reproducible against the DuckDB oracle. ``get_session`` only builds Spark
+conf: it writes no environment variable and no file.
 """
 
 from __future__ import annotations
@@ -132,25 +133,10 @@ def get_session(
     cluster, pass ``master=None`` with a pre-set master URL via
     spark-submit — the defaults here are orthogonal to deployment.
     """
-    # Resolve google.protobuf availability BEFORE the JVM launches: the
-    # typed-state operator's Python workers inherit the driver JVM's env,
-    # so a bundled runtime's shim PYTHONPATH entry must be exported now
-    # (deferring to first typed-state use would be too late — the JVM env
-    # is frozen at launch). What gets exported is a google/protobuf-only
-    # shim that merges into any pre-existing PYTHONPATH (never the bundle
-    # dir, never an overwrite — r07 ADVICE). SPARK_GRAFT_TYPED_STATE=0
-    # skips the wiring entirely for deployments that never run typed state.
     conf = dict(SCALE_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = _default_shuffle_partitions()
     if extra_conf:
         conf.update(extra_conf)
-    if os.environ.get("SPARK_GRAFT_TYPED_STATE", "1") != "0":
-        from slr207_mapreduce_spark.internal import protobuf_compat
-
-        protobuf_compat.ensure_protobuf()
-        conf.update(
-            protobuf_compat.worker_env(conf.get("spark.executorEnv.PYTHONPATH"))
-        )
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"

@@ -190,115 +190,22 @@ def closed_user_sessions(events: DataFrame, watermark: str = "10 minutes") -> Da
     )
 
 
-# --- transformWithState (Spark 4 arbitrary-state API) ---------------------
+# --- Per-user event-type map: the two-level eager accumulator -------------
 #
-# The successor surface to applyInPandasWithState: typed state primitives
-# (ValueState / ListState / MapState) + event/processing-time timers on a
-# StatefulProcessor object. Same scale shape — state partitioned by the
-# group key, shuffled once, updated locally with Arrow batches.
-#
-# Runtime note: the operator's state server speaks protobuf, and its
-# per-key typed states map to state-store column families, which only the
-# RocksDB provider supports. Both are resolved at runtime:
-# internal/protobuf_compat.py makes google.protobuf importable from a
-# container-bundled pure-Python runtime when no installed one exists, and
-# enable_typed_state() switches the session to the RocksDB provider — so
-# the REAL state-server path runs end-to-end in this container's test
-# suite (tests/test_streaming.py::test_stateful_event_type_counts_e2e),
-# with the applyInPandasWithState fallback kept for builds where neither
-# is available.
+# The reference's per-key HashMap accumulator (ListenerReducer.java:123-139)
+# with a (user, event_type) key: applyInPandasWithState partitions state by
+# user_id, shuffles once, and folds each micro-batch's Arrow chunks into the
+# user's event_type -> count map.
 
-TWS_OUTPUT_SCHEMA = StructType(
+EVENT_TYPE_COUNTS_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
         StructField("event_type", StringType()),
         StructField("n_events", LongType()),
     ]
 )
-
-
-try:  # Spark ≥4.0 only; keep the module importable everywhere
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class EventTypeCounts(StatefulProcessor):
-    """Per-user MapState[event_type → count], emitted (full map) on every
-    batch the user appears in — the reference's eager per-key HashMap
-    accumulator (ListenerReducer.java:123-139) with a two-level key,
-    rebuilt on the typed-state API."""
-
-    def init(self, handle) -> None:
-        self.counts = handle.getMapState(
-            "counts",
-            StructType([StructField("event_type", StringType())]),
-            StructType([StructField("n", LongType())]),
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (user_id,) = key
-        for pdf in rows:
-            for et, cnt in pdf["event_type"].value_counts().items():
-                k = (et,)
-                prev = self.counts.getValue(k)[0] if self.counts.containsKey(k) else 0
-                self.counts.updateValue(k, (prev + int(cnt),))
-        items = sorted((k[0], v[0]) for k, v in self.counts.iterator())
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(items),
-                "event_type": [k for k, _ in items],
-                "n_events": [v for _, v in items],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _typed_state_ready(spark) -> bool:
-    """Can transformWithStateInPandas run on THIS session right now?
-    Requires (a) an importable google.protobuf for the state-server wire
-    protocol and (b) the RocksDB state-store provider (the typed states'
-    column families are unsupported by HDFSBackedStateStoreProvider)."""
-    from slr207_mapreduce_spark.internal.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        return False
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    return "RocksDB" in prov
-
-
-def enable_typed_state(spark) -> bool:
-    """Opt a session into the typed-state engine: resolve protobuf, then
-    set the RocksDB provider (a runtime SQL conf, read per query start —
-    only NEW streaming queries from fresh checkpoints are affected).
-    Returns whether the typed path is now selectable."""
-    from slr207_mapreduce_spark.internal.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        return False
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    return _typed_state_ready(spark)
-
-
-def selected_engine(spark) -> str:
-    """Which engine user_event_type_counts will pick on this session:
-    'typed' (transformWithStateInPandas) or 'fallback'
-    (applyInPandasWithState)."""
-    return "typed" if _typed_state_ready(spark) else "fallback"
-
-
-# Fallback state layout for builds without the transformWithState state
-# server (google.protobuf missing): the MapState[event_type → count] is
-# carried as two parallel arrays inside applyInPandasWithState's GroupState.
+# The event_type -> count map as two parallel arrays (GroupState holds a
+# row, not a map).
 _ETC_STATE_SCHEMA = StructType(
     [
         StructField("event_types", ArrayType(StringType())),
@@ -330,29 +237,21 @@ def _update_event_type_counts(
 
 
 def user_event_type_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Running per-(user, event_type) counts — MapState semantics, emitted
-    as the full sorted map for every user seen in a batch (update mode).
+    """Running per-(user, event_type) counts, emitted as the user's full
+    map sorted by event_type for every user seen in a batch (update mode).
 
-    Engine selection is a runtime capability check: the Spark-4 typed-state
-    surface (transformWithStateInPandas + MapState) when its protobuf state
-    server and the RocksDB provider are available on this session, else the
-    applyInPandasWithState fallback carrying the map as array-typed
-    GroupState. Same semantics either way — the streaming e2e test runs
-    unconditionally against THIS function (asserting the typed engine was
-    the one exercised wherever protobuf resolves), and the typed-state
-    processor keeps its protobuf-free unit test (tests/test_streaming.py)."""
-    keyed = events.withWatermark("ts", watermark).groupBy("user_id")
-    if _typed_state_ready(events.sparkSession):
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=EventTypeCounts(),
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+    State layout: one GroupState row per user holding two parallel arrays
+    (event_types, counts). A user's state therefore grows with the number
+    of distinct event_type values, not with the number of events; it is
+    never timed out, so the key space (users) bounds the store."""
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update_event_type_counts,
+            outputStructType=EVENT_TYPE_COUNTS_SCHEMA,
+            stateStructType=_ETC_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    return keyed.applyInPandasWithState(
-        _update_event_type_counts,
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        stateStructType=_ETC_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -22,11 +22,6 @@ pinned:
 - the batch sweep's global anti-patterns (``CartesianProduct``,
   row-at-a-time ``BatchEvalPython``) stay absent from executed streaming
   plans too.
-
-The typed-state engine (transformWithStateInPandas + RocksDB) and its
-applyInPandasWithState fallback are pinned as SEPARATE cases, so an engine
--selection regression (silently falling back) fails here as well as in
-test_streaming.py.
 """
 
 from __future__ import annotations
@@ -140,6 +135,11 @@ def _cases():
             ["applyInPandasWithState"],
             True,
         ),
+        "user_event_type_counts": (
+            lambda sp, ev, dd: (ST.user_event_type_counts(_events(sp, ev), "10 hours"), "update"),
+            ["applyInPandasWithState"],
+            True,
+        ),
         "closed_user_sessions": (
             lambda sp, ev, dd: (ST.closed_user_sessions(_events(sp, ev), "10 minutes"), "append"),
             ["applyInPandasWithState"],
@@ -190,37 +190,5 @@ def test_streaming_plan_sweep(spark, ev_dir, doc_dir, name):
         assert "BroadcastHashJoin" in a["plan"], "corpus band table must broadcast"
     if name == "stream_static_enrich":
         assert "BroadcastHashJoin" in a["plan"], "static dim must broadcast"
-
-
-def test_streaming_plan_sweep_typed_vs_fallback_engine(spark, ev_dir):
-    """user_event_type_counts under BOTH engines: the fallback must run
-    FlatMapGroupsInPandasWithState, and (protobuf resolving in this
-    container) the typed engine must run transformWithStateInPandasExec on
-    the RocksDB provider — pinning engine selection at the executed-plan
-    level."""
-    from slr207_mapreduce_spark.internal.protobuf_compat import ensure_protobuf
-    from slr207_mapreduce_spark.streaming.stateful import (
-        enable_typed_state,
-        user_event_type_counts,
-    )
-
-    a = _run_and_audit(user_event_type_counts(_events(spark, ev_dir), "10 hours"), "update")
-    assert a["state_ops"] == ["applyInPandasWithState"]
-    assert "FlatMapGroupsInPandasWithState" in a["plan"]
-    assert "EventTimeWatermark" in a["plan"]
-
-    assert ensure_protobuf(), "this container must resolve a protobuf runtime"
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    assert enable_typed_state(spark)
-    try:
-        t = _run_and_audit(
-            user_event_type_counts(_events(spark, ev_dir), "10 hours"), "update"
-        )
-        assert t["state_ops"] == ["transformWithStateInPandasExec"]
-        assert "EventTimeWatermark" in t["plan"]
-        assert "Exchange hashpartitioning" in t["plan"]
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
+    if name == "user_event_type_counts":
+        assert "FlatMapGroupsInPandasWithState" in a["plan"], name

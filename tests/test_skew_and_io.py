@@ -400,6 +400,18 @@ def test_default_shuffle_partitions_rejects_malformed_env(monkeypatch):
         monkeypatch.delenv(name)
 
 
+def test_get_session_leaves_process_env_alone(spark):
+    """get_session only builds Spark conf: it exports no PYTHONPATH entry
+    into the driver process or the executors, and sets no environment
+    variable."""
+    assert not any(
+        "slr207_protobuf_shims" in p
+        for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    )
+    assert "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK" not in os.environ
+    assert not spark.sparkContext.getConf().contains("spark.executorEnv.PYTHONPATH")
+
+
 def test_narrow_scan_rebalances_oversized_row_groups(spark, tmp_path):
     """A parquet file's real split count is its ROW-GROUP count: byte-range
     splits snap to row-group boundaries, so a file with 1 giant row group

@@ -401,42 +401,31 @@ def test_stateful_running_totals(spark, tmp_path):
 
 
 def test_stateful_event_type_counts_e2e(spark, tmp_path):
-    """Typed MapState semantics end-to-end (no skip): final per-(user,
-    event_type) counts across micro-batches must equal the batch groupBy.
-    user_event_type_counts selects its engine at runtime; in THIS
-    container the protobuf_compat probe resolves a bundled runtime and
-    enable_typed_state switches to the RocksDB provider, so the test
-    asserts the REAL transformWithStateInPandas state-server path is the
-    one exercised (r06 VERDICT item 5 — previously only the
-    applyInPandasWithState fallback ran here). On a build where protobuf
-    genuinely cannot resolve, the same e2e contract runs on the fallback
-    engine; the typed-state processor additionally keeps its
-    protobuf-free unit test below. Update-mode memory sink keeps every
-    emission; the LAST row per key is the final state."""
-    from slr207_mapreduce_spark.internal.protobuf_compat import ensure_protobuf
+    """Per-(user, event_type) map state end-to-end (no skip): final counts
+    across micro-batches must equal the batch groupBy. Runs under the
+    RocksDB state-store provider; the default provider is covered by the
+    streaming plan sweep. Update-mode memory sink keeps every emission;
+    the LAST row per key is the final state."""
     from slr207_mapreduce_spark.sources.tables import load_table
     from slr207_mapreduce_spark.streaming.ops import read_events_stream
-    from slr207_mapreduce_spark.streaming.stateful import (
-        enable_typed_state,
-        selected_engine,
-        user_event_type_counts,
-    )
+    from slr207_mapreduce_spark.streaming.stateful import user_event_type_counts
 
+    ev = load_table(spark, "events", SF_SMOKE).orderBy("ts").limit(200).cache()
+    d = str(tmp_path / "etc_src")
+    ev.coalesce(1).write.parquet(d)
+    stream = read_events_stream(spark, d, max_files_per_trigger=1)
     prior_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
-    typed = enable_typed_state(spark)
-    assert typed == ensure_protobuf()  # protobuf resolved => typed engine on
-    assert selected_engine(spark) == ("typed" if typed else "fallback")
-    ev = load_table(spark, "events", SF_SMOKE).orderBy("ts").limit(200).cache()
-    d = str(tmp_path / "tws_src")
-    ev.coalesce(1).write.parquet(d)
-    stream = read_events_stream(spark, d, max_files_per_trigger=1)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     try:
         q = (
             user_event_type_counts(stream, "10 hours")
             .writeStream.format("memory")
-            .queryName("t_tws")
+            .queryName("t_etc")
             .outputMode("update")
             .trigger(availableNow=True)
             .start()
@@ -450,7 +439,7 @@ def test_stateful_event_type_counts_e2e(spark, tmp_path):
                 "spark.sql.streaming.stateStore.providerClass", prior_provider
             )
     got = {}
-    for r in spark.table("t_tws").collect():  # later emissions overwrite
+    for r in spark.table("t_etc").collect():  # later emissions overwrite
         got[(r["user_id"], r["event_type"])] = r["n_events"]
     want = {
         (r["user_id"], r["event_type"]): r["n"]
@@ -501,66 +490,50 @@ def test_session_window_stream_matches_batch_query(spark, batch_dir):
 
 
 def test_event_type_counts_update_logic_without_state_server():
-    """Protobuf-free unit test of the transformWithState processor
-    (VERDICT r3 item #7): EventTypeCounts.handleInputRows drives a
-    duck-typed MapState, pinning the accumulation/emission logic with zero
-    Spark/state-server machinery — the real state-server path is covered
-    by the e2e test above (typed engine via protobuf_compat + RocksDB)."""
+    """Drives _update_event_type_counts with a duck-typed GroupState,
+    pinning the accumulation/emission logic with zero Spark machinery —
+    the state-store path is covered by the e2e test above."""
     import pandas as pd
 
-    from slr207_mapreduce_spark.streaming.stateful import EventTypeCounts
+    from slr207_mapreduce_spark.streaming.stateful import _update_event_type_counts
 
-    class FakeMapState:
+    class FakeState:
         def __init__(self):
-            self.d = {}
+            self.value = None
 
-        def containsKey(self, k):
-            return k in self.d
+        @property
+        def exists(self):
+            return self.value is not None
 
-        def getValue(self, k):
-            return self.d[k]
+        @property
+        def get(self):
+            return self.value
 
-        def updateValue(self, k, v):
-            self.d[k] = v
+        def update(self, v):
+            self.value = v
 
-        def iterator(self):
-            return iter(self.d.items())
+    state = FakeState()
 
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
+    def update(*chunks):
+        pdfs = [pd.DataFrame({"event_type": c}) for c in chunks]
+        (out,) = _update_event_type_counts((7,), pdfs, state)
+        return out
 
-        def getMapState(self, name, key_schema, value_schema):
-            return self.states.setdefault(name, FakeMapState())
-
-    proc = EventTypeCounts()
-    proc.init(FakeHandle())
-
-    batch1 = pd.DataFrame({"event_type": ["click", "view", "click"]})
-    out1 = list(proc.handleInputRows((7,), [batch1], None))
-    assert len(out1) == 1
-    got1 = dict(zip(out1[0]["event_type"], out1[0]["n_events"]))
+    out1 = update(["click", "view", "click"])
+    got1 = dict(zip(out1["event_type"], out1["n_events"]))
     assert got1 == {"click": 2, "view": 1}
-    assert list(out1[0]["user_id"].unique()) == [7]
+    assert list(out1["user_id"].unique()) == [7]
 
     # state persists across invocations (micro-batches) and accumulates;
     # emission is the FULL map, sorted by event_type
-    batch2 = pd.DataFrame({"event_type": ["view", "view", "purchase"]})
-    out2 = list(proc.handleInputRows((7,), [batch2], None))
-    got2 = dict(zip(out2[0]["event_type"], out2[0]["n_events"]))
+    out2 = update(["view", "view", "purchase"])
+    got2 = dict(zip(out2["event_type"], out2["n_events"]))
     assert got2 == {"click": 2, "view": 3, "purchase": 1}
-    assert list(out2[0]["event_type"]) == sorted(got2)
+    assert list(out2["event_type"]) == sorted(got2)
 
     # multiple pandas chunks within one invocation fold into one update
-    out3 = list(
-        proc.handleInputRows(
-            (7,),
-            [pd.DataFrame({"event_type": ["click"]}),
-             pd.DataFrame({"event_type": ["click"]})],
-            None,
-        )
-    )
-    assert dict(zip(out3[0]["event_type"], out3[0]["n_events"]))["click"] == 4
+    out3 = update(["click"], ["click"])
+    assert dict(zip(out3["event_type"], out3["n_events"]))["click"] == 4
 
 
 def test_session_close_watermark_boundary_is_strict():
@@ -760,93 +733,6 @@ def test_streaming_neardup_gate_matches_batch_join(spark, tmp_path):
     }
     assert got == want and len(want) > 0
     assert (999_999, 0) in got, "planted near-duplicate not flagged"
-
-
-def test_protobuf_compat_probe():
-    """The protobuf_compat probe must resolve a usable google.protobuf in
-    this container (installed or bundled) and export it to child
-    processes, since the typed-state e2e above depends on it."""
-    import os
-
-    from slr207_mapreduce_spark.internal import protobuf_compat as pc
-
-    assert pc.ensure_protobuf() is True
-    import google.protobuf  # noqa: F401  (now importable)
-
-    d = pc.bundled_dir()
-    if d is not None:  # bundled path: worker export must be wired
-        assert pc.worker_env()["spark.executorEnv.PYTHONPATH"] == d
-        assert d in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-        assert (
-            os.environ.get("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK") == "true"
-        )
-        # r07 ADVICE item 1: what is exported must be a google/protobuf-only
-        # SHIM, not the bundle dir — its sibling packages (notably the
-        # bundle's own `google`) would otherwise shadow site-packages in
-        # every child Python. The shim's google/ must contain exactly the
-        # protobuf symlink plus a pkgutil namespace stub, so other
-        # installed google.* distributions keep resolving.
-        entries = sorted(os.listdir(d))
-        assert entries == ["google"], entries
-        g = sorted(os.listdir(os.path.join(d, "google")))
-        assert g == ["__init__.py", "protobuf"], g
-        assert os.path.islink(os.path.join(d, "google", "protobuf"))
-        with open(os.path.join(d, "google", "__init__.py")) as f:
-            assert "extend_path" in f.read()
-        # merge, never overwrite: a pre-existing executor PYTHONPATH is kept
-        merged = pc.worker_env("/custom/libs")["spark.executorEnv.PYTHONPATH"]
-        assert merged.split(os.pathsep) == ["/custom/libs", d]
-
-
-def test_protobuf_shim_dir_is_private_and_rejects_planted_dirs(tmp_path, monkeypatch):
-    """r08 ADVICE item 1: the shim must NOT be built at a predictable
-    world-writable tempdir path. It lives under the per-user cache dir,
-    every reused level must verify as a non-symlink 0o700 dir owned by
-    this uid, and a pre-created (planted) directory failing that check is
-    abandoned for a fresh mkdtemp — never trusted."""
-    import os
-    import stat
-
-    from slr207_mapreduce_spark.internal import protobuf_compat as pc
-
-    # fake bundled runtime the shim will point at
-    candidate = tmp_path / "bundle"
-    (candidate / "google" / "protobuf").mkdir(parents=True)
-    (candidate / "google" / "protobuf" / "__init__.py").write_text("")
-
-    # clean cache root: shim is created there, private at every level
-    cache = tmp_path / "cache"
-    monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
-    shim = pc._build_shim(str(candidate))
-    assert shim is not None and shim.startswith(str(cache))
-    for lvl in (os.path.dirname(shim), shim, os.path.join(shim, "google")):
-        st = os.lstat(lvl)
-        assert stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
-        assert (st.st_mode & 0o077) == 0, oct(st.st_mode)
-    assert os.path.islink(os.path.join(shim, "google", "protobuf"))
-    # reuse: same candidate → same shim (deterministic, no accumulation)
-    assert pc._build_shim(str(candidate)) == shim
-
-    # planted attack shape: the deterministic path pre-exists but is
-    # group/other-accessible (as an attacker's pre-created dir would be —
-    # ownership by another uid can't be simulated without root, and the
-    # permission check rejects this shape the same way)
-    os.chmod(shim, 0o775)
-    shim2 = pc._build_shim(str(candidate))
-    assert shim2 is not None and shim2 != shim
-    assert not shim2.startswith(str(cache))  # fell back to a fresh mkdtemp
-    st = os.lstat(shim2)
-    assert st.st_uid == os.getuid() and (st.st_mode & 0o077) == 0
-    assert os.path.islink(os.path.join(shim2, "google", "protobuf"))
-    # a poisoned namespace stub in a reused dir is rewritten, not executed
-    os.chmod(shim, 0o700)
-    init = os.path.join(shim, "google", "__init__.py")
-    with open(init, "w") as f:
-        f.write("raise RuntimeError('poisoned')\n")
-    shim3 = pc._build_shim(str(candidate))
-    assert shim3 == shim
-    with open(init) as f:
-        assert "extend_path" in f.read()
 
 
 def test_streaming_countmin_counters_match_batch_sketch(spark, batch_dir):

@@ -52,6 +52,10 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
 
 def _day_chunks(src: str, out_dir: str, max_days: int | None = None) -> int:
     """Split an events parquet into one file per calendar day, with mtimes
@@ -191,9 +195,9 @@ def main() -> int:
         "--provider",
         choices=("default", "rocksdb"),
         default="default",
-        help="state store provider: 'default' (HDFS-backed) or 'rocksdb' "
-        "(the off-heap provider the typed-state engine requires — the one "
-        "a 100 TB deployment runs; see streaming/stateful.py)",
+        help="state store provider: 'default' (HDFS-backed, state on the "
+        "JVM heap) or 'rocksdb' (state off-heap in RocksDB, the provider a "
+        "deployment with large state runs)",
     )
     args = ap.parse_args()
 
@@ -206,8 +210,6 @@ def main() -> int:
     # cross-check n_batches against the day-file count below.
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1000")
     if args.provider == "rocksdb":
-        from slr207_mapreduce_spark.streaming.stateful import ROCKSDB_PROVIDER
-
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
         )
