@@ -101,46 +101,6 @@ def portable_hash64_lane_sql(expr: str, pair: int, lane: int) -> str:
     )
 
 
-def int_units(col: Column | str, digits: int = 2) -> Column:
-    """Fixed-point int64 view of a (<=digits-decimal) double column.
-
-    x * 10^digits on a value that is exactly representable with ``digits``
-    decimals lands within 1e-9 of an integer, so every rounding mode
-    agrees; floor(x·10^d + 0.5) picks the same integer for any sign under
-    that contract. floor is a raw codegen intrinsic while round() routes
-    through BigDecimal HALF_UP per row — the swap cut the q1 partial pass
-    0.47 → 0.27 s at sf0.1 with bit-identical sums (verified). Still ~2.8x
-    cheaper than a DECIMAL cast per row.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * (10 ** digits) + F.lit(0.5)).cast("long")
-
-
-def exact_total(sum_col: Column | str, digits: int) -> Column:
-    """Final-stage conversion for HIERARCHICAL exact aggregation.
-
-    The pattern (see q1_pricing_summary): per-scan-partition partial sums
-    in int64 fixed-point (``int_units`` products — overflow-safe because a
-    128 MB scan partition bounds rows per task at ~2e6, keeping partials
-    under ~2e17 even for 1e11-unit products), then a tiny final merge of
-    the partials in DECIMAL(38,0) — which cannot overflow — and the
-    conversion back to natural units here.
-
-    Order of operations matters for cross-engine stability: the exact
-    integer is cast to DOUBLE FIRST, then divided by 10^digits. While the
-    unscaled value stays under 2^53 this is bit-identical to
-    divide-then-cast (both operands exact → one correctly-rounded IEEE
-    division). Once the unscaled sum passes 2^53 (first seen at sf1:
-    q1's sum_charge unscaled ≈ 4.4e16), divide-then-cast hits DuckDB's
-    two-step DECIMAL→DOUBLE rounding and drifts 1 ulp from Spark's
-    BigDecimal cast — cast-the-integer-first is the one sequence both
-    engines execute identically at every scale (int→double is correctly
-    rounded in both; the oracle mirrors it, see q1's sum_charge SQL).
-    """
-    c = F.col(sum_col) if isinstance(sum_col, str) else sum_col
-    return c.cast("double") / F.lit(float(10 ** digits))
-
-
 # Count-min geometry shared by the batch events sketch
 # (plans/events.py), the streaming counters (streaming/ops.py),
 # and the stream==batch parity test — ONE definition so a one-sided

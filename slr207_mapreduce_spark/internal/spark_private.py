@@ -9,128 +9,36 @@ the whole session and compound across the driver's query set (observed
 storage-pressure failures at sf0.1 before the release path existed).
 
 Everything here rides py4j handles that are version-sensitive
-(``df._jdf.queryExecution().analyzed()``, ``sc._jsc.getPersistentRDDs()``),
-so the module self-probes ONCE per session: ``capabilities()`` runs the
-full traverse-and-release cycle on a throwaway frame and caches the
-verdict. On a Spark build where the probe fails, every function degrades
-to the documented BOUNDED-LEAK path — ids come back empty, release is a
-no-op, correctness is untouched and only superseded checkpoint blocks
-stay pinned until session end. tests/test_graph.py pins both the happy
-path and the degradation contract.
+(``df._jdf.queryExecution().analyzed()``, ``sc._jsc.getPersistentRDDs()``).
+There is no fallback: if the private surface changes, these functions
+raise, so a Spark upgrade fails loudly instead of silently leaking
+checkpoint blocks for the session. tests/test_graph.py pins the surface
+and the Spark minor it was validated against.
 """
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
-
-# Probe verdicts keyed by the SparkSession object (weakly, so a stopped
-# session's entry dies with it). A process-global bool was stale for a
-# second session created in the same process with a different Spark
-# build/config (r06 ADVICE) — each distinct session now probes once.
-_CAPABLE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-# Spark minor versions this private surface has been validated against
-# (r07 verdict item 7). probe_report() compares the session's runtime
-# version to this pin so a Spark bump surfaces as an explicit
-# version-drift signal in tests — not just a silent bounded-leak
-# fallback discovered later under storage pressure.
-VALIDATED_SPARK_MINORS: tuple[str, ...] = ("4.1",)
-
-
-def probe_report(spark) -> dict:
-    """The capability verdict WITH its provenance: the runtime Spark
-    version, whether that minor is one the private surface was validated
-    against, and the probe outcome. tests/test_graph.py asserts on this so
-    a Spark upgrade fails with 'version drift' instead of a mystery
-    degradation."""
-    version = getattr(spark, "version", "unknown")
-    minor = ".".join(version.split(".")[:2])
-    return {
-        "spark_version": version,
-        "validated_minor": minor in VALIDATED_SPARK_MINORS,
-        "capable": capabilities(spark),
-    }
-
-
-def _probe(spark) -> bool:
-    """Exercise the exact private surface the adapters use, end-to-end, on
-    a 1-row frame: checkpoint → read the LogicalRDD id off the analyzed
-    plan → find it in the persistent-RDD map → unpersist → verify gone."""
-    try:
-        df = spark.range(1).localCheckpoint(eager=True)
-        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
-        sc = spark.sparkContext
-        found = False
-        for e in sc._jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() == rdd_id:
-                e.getValue().unpersist(False)
-                found = True
-        if not found:
-            return False
-        remaining = {
-            e.getKey() for e in sc._jsc.getPersistentRDDs().entrySet().toArray()
-        }
-        return rdd_id not in remaining
-    except Exception:
-        return False
-
-
-def capabilities(spark) -> bool:
-    """True when this Spark build supports the private checkpoint-release
-    surface (probed once per SESSION, weak-cached)."""
-    try:
-        verdict = _CAPABLE.get(spark)
-    except TypeError:  # unhashable/unweakrefable stand-in (mocks in tests)
-        return _probe(spark)
-    if verdict is None:
-        verdict = _probe(spark)
-        try:
-            _CAPABLE[spark] = verdict
-        except TypeError:
-            pass
-    return verdict
-
-
-def checkpointed_rdd_id(df: DataFrame) -> set[int]:
-    """{id of the RDD a localCheckpoint'ed frame wraps}, or empty set when
-    the plan shape is unexpected / the capability probe failed (degrade to
-    bounded leak, never risk releasing another query's blocks)."""
-    if not capabilities(df.sparkSession):
-        return set()
-    try:
-        return {df._jdf.queryExecution().analyzed().rdd().id()}
-    except Exception:
-        return set()
 
 
 def logical_rdd_leaf_ids(df: DataFrame) -> set[int]:
     """Ids of every LogicalRDD leaf under ``df``'s analyzed plan — the
-    localCheckpoint blocks a (possibly projected) result frame pins.
-    Empty set on any failure (bounded-leak degradation)."""
-    if not capabilities(df.sparkSession):
-        return set()
+    localCheckpoint blocks a (possibly projected) result frame pins. For a
+    frame fresh out of ``localCheckpoint`` this is exactly the one RDD the
+    checkpoint persisted."""
     ids: set[int] = set()
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getName().endswith("LogicalRDD"):
-                ids.add(leaf.rdd().id())
-    except Exception:
-        return set()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getName().endswith("LogicalRDD"):
+            ids.add(leaf.rdd().id())
     return ids
 
 
 def unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    """RDD-level unpersist for exactly the given ids; no-op on empty input
-    or when the private surface is unavailable."""
+    """RDD-level unpersist for exactly the given ids; no-op on empty input."""
     if not ids:
         return
-    try:
-        for e in sc._jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() in ids:
-                e.getValue().unpersist(False)
-    except Exception:
-        pass  # bounded leak beats a crash in a cleanup path
+    for e in sc._jsc.getPersistentRDDs().entrySet().toArray():
+        if e.getKey() in ids:
+            e.getValue().unpersist(False)

@@ -29,6 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from slr207_mapreduce_spark.internal.spark_private import (
+    logical_rdd_leaf_ids,
+    unpersist_rdd_ids,
+)
+
 
 def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """``localCheckpoint`` the frame and return (frame, {pinned RDD id}).
@@ -38,31 +43,19 @@ def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
     straight off the frame — no diffing of the session-global persistent-RDD
     map, which under concurrent queries would capture (and later free)
     blocks some OTHER query pinned in the same window. All private-API
-    access lives in internal/spark_private.py (one choke point with a
-    capability probe); on an incompatible Spark build the ids come back
-    empty and release degrades to the documented bounded leak.
-    """
-    from slr207_mapreduce_spark.internal.spark_private import checkpointed_rdd_id
+    access lives in internal/spark_private.py, which raises if that
+    surface changes.
 
-    ck = df.localCheckpoint(eager=True)
-    return ck, checkpointed_rdd_id(ck)
-
-
-def _release_ids(sc, ids: set[int]) -> None:
-    """RDD-level unpersist for the given ids (see internal/spark_private).
-
+    The ids go to ``unpersist_rdd_ids`` once the round is superseded:
     ``DataFrame.unpersist()`` goes through the CacheManager and does NOT
     free ``localCheckpoint`` blocks (those are pinned at the RDD layer), so
     superseded per-round checkpoints would otherwise live for the whole
     SESSION — and the driver runs its entire query set in one session.
     The leak compounds across queries until unrelated later plans fail
-    under storage-memory pressure (observed at sf0.1). Ids passed here are
-    derived from each checkpointed frame itself (see ``_ckpt``), never from
-    a global diff, so concurrent queries' blocks are untouched.
+    under storage-memory pressure (observed at sf0.1).
     """
-    from slr207_mapreduce_spark.internal.spark_private import unpersist_rdd_ids
-
-    unpersist_rdd_ids(sc, ids)
+    ck = df.localCheckpoint(eager=True)
+    return ck, logical_rdd_leaf_ids(ck)
 
 
 def _pin_partitioned(df: DataFrame, key: str) -> DataFrame:
@@ -94,16 +87,6 @@ def _pin_partitioned(df: DataFrame, key: str) -> DataFrame:
     return pinned
 
 
-def result_checkpoint_ids(df: DataFrame) -> set[int]:
-    """Ids of every ``LogicalRDD`` leaf under ``df``'s analyzed plan — the
-    localCheckpoint blocks the frame pins.  Empty set on any unexpected plan
-    shape (the release path then degrades to the documented bounded leak
-    instead of freeing someone else's blocks)."""
-    from slr207_mapreduce_spark.internal.spark_private import logical_rdd_leaf_ids
-
-    return logical_rdd_leaf_ids(df)
-
-
 def release_result(df: DataFrame) -> None:
     """Free the localCheckpoint blocks pinned by a frame RETURNED from an
     iterative operator here, after the caller's terminal action.
@@ -115,7 +98,7 @@ def release_result(df: DataFrame) -> None:
     be used afterwards. Releases every ``LogicalRDD`` leaf under the frame
     (the result may be a projection over the checkpointed frame).
     """
-    _release_ids(df.sparkSession.sparkContext, result_checkpoint_ids(df))
+    unpersist_rdd_ids(df.sparkSession.sparkContext, logical_rdd_leaf_ids(df))
 
 
 def _label_sum(df: DataFrame) -> int:
@@ -219,7 +202,7 @@ def connected_components(
             # the superseded round is no longer referenced once the sum is
             # computed; the CURRENT round's blocks must stay (lineage is
             # truncated — the blocks ARE the data)
-            _release_ids(sc, prev_ids)
+            unpersist_rdd_ids(sc, prev_ids)
             prev_ids = new_ids
             labels = new_labels
             prev_sum = cur_sum
@@ -240,7 +223,7 @@ def connected_components(
         # round's blocks so the failure path doesn't leak for the session
         sym.unpersist(blocking=False)
         if not converged:
-            _release_ids(sc, prev_ids)
+            unpersist_rdd_ids(sc, prev_ids)
     # Only the final labels frame stays pinned — it IS the result
     # (callers may free it after their terminal action via release_result).
     return labels.select("node", F.col("label").alias("cluster_id"))
@@ -324,13 +307,13 @@ def pagerank_fp(
                     ).alias("rank_fp"),
                 )
             )
-            # release the superseded round (see _release_ids: leaked
-            # checkpoint blocks outlive the query and starve later plans)
-            _release_ids(sc, prev_ids)
+            # release the superseded round (see _ckpt: leaked checkpoint
+            # blocks outlive the query and starve later plans)
+            unpersist_rdd_ids(sc, prev_ids)
             prev_ids = new_ids
             ranks = new_ranks
     except BaseException:
-        _release_ids(sc, prev_ids)
+        unpersist_rdd_ids(sc, prev_ids)
         raise
     finally:
         # final ranks are checkpointed → they no longer read sym/nodes/graph
@@ -409,7 +392,7 @@ def bfs_distances(
     one shuffle on the edge key + one anti-join shuffle; per-round
     ``localCheckpoint`` truncates lineage exactly like
     :func:`connected_components` (and the superseded round's blocks are
-    released — see ``_release_ids``).
+    released — see ``_ckpt``).
 
     Unreachable nodes are absent from the result (not NULL-distance rows);
     seeds themselves report dist 0 whether or not they appear in ``edges``.
@@ -445,19 +428,19 @@ def bfs_distances(
             new_frontier, new_frontier_ids = _ckpt(
                 reached.join(settled, "node", "left_anti")
             )
-            _release_ids(sc, frontier_ids)
+            unpersist_rdd_ids(sc, frontier_ids)
             frontier, frontier_ids = new_frontier, new_frontier_ids
             if frontier.isEmpty():
                 break
             new_settled, new_settled_ids = _ckpt(settled.union(frontier))
-            _release_ids(sc, settled_ids)
+            unpersist_rdd_ids(sc, settled_ids)
             settled, settled_ids = new_settled, new_settled_ids
     except BaseException:
-        _release_ids(sc, settled_ids)
+        unpersist_rdd_ids(sc, settled_ids)
         raise
     finally:
         sym.unpersist(blocking=False)
-        _release_ids(sc, frontier_ids)
+        unpersist_rdd_ids(sc, frontier_ids)
     # only the settled frame (the result) stays pinned; callers may free it
     # after their terminal action via release_result
     return settled

@@ -178,15 +178,6 @@ def _pow2():
     return p
 
 
-def _entropy_encode_blocks(zq, comp_ids, dc_tabs, ac_tabs) -> bytes:
-    """Single-image wrapper over :func:`_entropy_encode_images`."""
-    import numpy as np
-
-    return _entropy_encode_images(
-        zq, comp_ids, np.zeros(len(zq), dtype=np.int64), 1, dc_tabs, ac_tabs
-    )[0]
-
-
 def _entropy_encode_images(
     zq, comp_ids, img_ids, n_images: int, dc_tabs, ac_tabs
 ) -> list:
@@ -1260,32 +1251,13 @@ def decode_jpeg_color_batch(payloads) -> list:
 # --------------------------------------------------------------------------
 
 
-def _spark_types():
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    blob = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    feat = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("sum_gray", LongType()),
-        ]
-    )
-    return blob, feat
-
-
 def _synth_jpeg_payloads(doc_ids) -> list:
-    """Per-batch body of :func:`synth_jpeg_blobs`: the deterministic gray
-    test images, batch-encoded."""
+    """Real baseline JPEG bytes, batch-encoded, for the deterministic
+    test image w = 8·(1 + doc_id % 3), h = 8·(1 + doc_id % 2), built from
+    CONSTANT 8×8 blocks (row-major block index b) with gray value
+    (doc_id·7 + 13·b) % 256 — the block structure that makes the lossy
+    pipeline value-preserving (module docstring), so the round-trip query
+    stays exactly DuckDB-oracle-able."""
     import numpy as np
 
     imgs = []
@@ -1301,7 +1273,8 @@ def _synth_jpeg_payloads(doc_ids) -> list:
 
 
 def _jpeg_gray_feature_rows(doc_ids, payloads) -> dict:
-    """Per-batch body of :func:`jpeg_features`: cohort decode + rows."""
+    """Cohort decode of one Arrow batch of gray payloads into exact
+    dimensions and total gray sums."""
     rows = {"doc_id": [], "width": [], "height": [], "sum_gray": []}
     for doc_id, img in zip(doc_ids, decode_jpeg_gray_batch(payloads)):
         rows["doc_id"].append(doc_id)
@@ -1311,41 +1284,25 @@ def _jpeg_gray_feature_rows(doc_ids, payloads) -> dict:
     return rows
 
 
-def synth_jpeg_blobs(docs):
-    """(doc_id, payload): real baseline JPEG bytes for the deterministic
-    test image w = 8·(1 + doc_id % 3), h = 8·(1 + doc_id % 2), built from
-    CONSTANT 8×8 blocks (row-major block index b) with gray value
-    (doc_id·7 + 13·b) % 256 — the block structure that makes the lossy
-    pipeline value-preserving (module docstring), so the round-trip query
-    stays exactly DuckDB-oracle-able."""
-    import pandas as pd
-
-    blob_schema, _ = _spark_types()
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": _synth_jpeg_payloads(pdf["doc_id"])}
-            )
-
-    return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=blob_schema)
-
-
 def jpeg_roundtrip_features(docs):
     """Fused write→read round-trip: synthesize, encode, cohort-decode and
-    emit feature rows in ONE kernel. Row-identical to
-    ``jpeg_features(synth_jpeg_blobs(docs))`` — the separate operators
-    remain the real pipeline surface (at 100 TB the blobs are WRITTEN once
-    to parquet and feature passes READ them from storage, one JVM→Python
-    crossing) — but the chained benchmark shape shipped every payload
-    across the JVM boundary three times (out of the synth kernel, through
-    the JVM, into the feature kernel), which at docs_sf10 cost more than
-    both codec kernels combined (r11 profile). The fused form is the
-    benchmark-honest shape: the encoded bytes still exist and are fully
-    re-decoded."""
+    emit feature rows in ONE kernel. A chained synth-kernel → feature-kernel
+    shape shipped every payload across the JVM boundary three times (out of
+    the synth kernel, through the JVM, into the feature kernel), which at
+    docs_sf10 cost more than both codec kernels combined (r11 profile). The
+    fused form keeps the codec work honest: the encoded bytes still exist
+    and are fully re-decoded."""
     import pandas as pd
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    _, feat_schema = _spark_types()
+    feat_schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("width", IntegerType()),
+            StructField("height", IntegerType()),
+            StructField("sum_gray", LongType()),
+        ]
+    )
 
     def gen(batches):
         for pdf in batches:
@@ -1353,26 +1310,6 @@ def jpeg_roundtrip_features(docs):
             yield pd.DataFrame(_jpeg_gray_feature_rows(ids, _synth_jpeg_payloads(ids)))
 
     return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=feat_schema)
-
-
-def jpeg_features(blob_df):
-    """REAL decode: full baseline Huffman+IDCT decode of each payload,
-    emitting exact dimensions and the total gray sum (Arrow-batched)."""
-    import pandas as pd
-
-    _, feat_schema = _spark_types()
-
-    def feats(batches):
-        for pdf in batches:
-            # one cohort decode per Arrow batch (r11 — per-blob scalar
-            # entropy walks dominated the decode-side wall)
-            yield pd.DataFrame(
-                _jpeg_gray_feature_rows(pdf["doc_id"], list(pdf["payload"]))
-            )
-
-    return blob_df.select("doc_id", "payload").mapInPandas(
-        feats, schema=feat_schema
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1819,8 +1756,8 @@ def _decode_baseline_multi(payload: bytes):
     return scan, planes, h, w
 
 
-def synth_jpeg_color_blobs(docs):
-    """(doc_id, payload): real baseline 4:2:0 color JPEG bytes for the
+def _synth_jpeg_color_payloads(doc_ids) -> list:
+    """Real baseline 4:2:0 color JPEG bytes, batch-encoded, for the
     deterministic test image w = 16·(1 + doc_id % 2), h = 16·(1 +
     doc_id % 3), built from CONSTANT 16×16 MCUs (row-major MCU index b)
     with RGB ((d·3+11b) % 256, (d·5+17b) % 256, (d·7+23b) % 256). With
@@ -1828,24 +1765,6 @@ def synth_jpeg_color_blobs(docs):
     value-preserving per MCU, so decoded channel sums follow from plain
     double arithmetic (the oracle mirrors the exact expression order with
     roundbankers = round-half-even = np.rint)."""
-    import pandas as pd
-
-    blob_schema, _ = _spark_types()
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": _synth_jpeg_color_payloads(pdf["doc_id"]),
-                }
-            )
-
-    return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=blob_schema)
-
-
-def _synth_jpeg_color_payloads(doc_ids) -> list:
-    """Per-batch body of :func:`synth_jpeg_color_blobs`."""
     import numpy as np
 
     imgs = []
@@ -1868,7 +1787,8 @@ def _synth_jpeg_color_payloads(doc_ids) -> list:
 
 
 def _jpeg_color_feature_rows(doc_ids, payloads) -> dict:
-    """Per-batch body of :func:`jpeg_color_features`: cohort decode."""
+    """Cohort decode of one Arrow batch of color payloads into exact
+    dimensions and per-channel sums."""
     rows = {
         "doc_id": [], "width": [], "height": [],
         "sum_r": [], "sum_g": [], "sum_b": [],
@@ -1886,8 +1806,7 @@ def _jpeg_color_feature_rows(doc_ids, payloads) -> dict:
 
 def jpeg_color_roundtrip_features(docs):
     """Fused color write→read round-trip in one kernel — see
-    :func:`jpeg_roundtrip_features` for the rationale (row-identical to
-    ``jpeg_color_features(synth_jpeg_color_blobs(docs))``)."""
+    :func:`jpeg_roundtrip_features` for the rationale."""
     import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
@@ -1915,38 +1834,6 @@ def jpeg_color_roundtrip_features(docs):
             )
 
     return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=schema)
-
-
-def jpeg_color_features(blob_df):
-    """REAL decode: full interleaved 4:2:0 baseline decode of each
-    payload, emitting exact dimensions and per-channel sums."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("sum_r", LongType()),
-            StructField("sum_g", LongType()),
-            StructField("sum_b", LongType()),
-        ]
-    )
-
-    def feats(batches):
-        for pdf in batches:
-            # one cohort decode per Arrow batch (r11)
-            yield pd.DataFrame(
-                _jpeg_color_feature_rows(pdf["doc_id"], list(pdf["payload"]))
-            )
-
-    return blob_df.select("doc_id", "payload").mapInPandas(feats, schema=schema)
 
 
 # --------------------------------------------------------------------------
@@ -2166,34 +2053,15 @@ def decode_avi_mjpeg_frames(payload: bytes, every_n: int = 1):
     ]
 
 
-def synth_mjpeg_blobs(docs):
-    """(doc_id, payload): real MJPEG AVI bytes — n = 3 + doc_id % 5 frames
-    of w = 8·(1 + doc_id % 3), h = 8·(1 + doc_id % 2), each frame built
-    from CONSTANT 8×8 blocks with gray (doc_id·7 + frame·11 + 13·b) % 256,
-    the value-preserving construction the JPEG round-trip query uses."""
-    import numpy as np
-    import pandas as pd
-
-    blob_schema, _ = _spark_types()
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": _synth_mjpeg_payloads(pdf["doc_id"]),
-                }
-            )
-
-    return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=blob_schema)
-
-
 def _synth_mjpeg_payloads(doc_ids) -> list:
-    """Per-batch body of :func:`synth_mjpeg_blobs`: build every frame of
-    every video first, batch-encode them in ONE call (r10 — per-video
-    encode batched only 3-7 tiny frames; the shape-grouped batch coder
-    amortizes across the whole Arrow batch), then mux each video's slice
-    of jpegs."""
+    """Real MJPEG AVI bytes — n = 3 + doc_id % 5 frames of
+    w = 8·(1 + doc_id % 3), h = 8·(1 + doc_id % 2), each frame built from
+    CONSTANT 8×8 blocks with gray (doc_id·7 + frame·11 + 13·b) % 256, the
+    value-preserving construction the JPEG round-trip query uses. Builds
+    every frame of every video first, batch-encodes them in ONE call (r10
+    — per-video encode batched only 3-7 tiny frames; the shape-grouped
+    batch coder amortizes across the whole Arrow batch), then muxes each
+    video's slice of jpegs."""
     import numpy as np
 
     dims = []  # (h, w, n_frames) per doc
@@ -2218,8 +2086,9 @@ def _synth_mjpeg_payloads(doc_ids) -> list:
 
 
 def _mjpeg_feature_rows(doc_ids, payloads, every_n: int) -> dict:
-    """Per-batch body of :func:`mjpeg_features`: demux every video, then
-    ONE JPEG cohort over all sampled frames of all videos (r11)."""
+    """One feature row per SAMPLED frame (exact gray sums; unsampled frames
+    are seeked over, never decoded): demux every video, then ONE JPEG
+    cohort over all sampled frames of all videos (r11)."""
     rows = {"doc_id": [], "frame_idx": [], "width": [], "height": [], "sum_gray": []}
     frames, meta = [], []
     for doc_id, payload in zip(doc_ids, payloads):
@@ -2238,8 +2107,7 @@ def _mjpeg_feature_rows(doc_ids, payloads, every_n: int) -> dict:
 
 def mjpeg_roundtrip_features(docs, every_n: int = 2):
     """Fused MJPEG write→read round-trip in one kernel — see
-    :func:`jpeg_roundtrip_features` for the rationale (row-identical to
-    ``mjpeg_features(synth_mjpeg_blobs(docs), every_n)``)."""
+    :func:`jpeg_roundtrip_features` for the rationale."""
     import pandas as pd
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -2261,28 +2129,3 @@ def mjpeg_roundtrip_features(docs, every_n: int = 2):
             )
 
     return fan_out_for_kernel(docs.select("doc_id")).mapInPandas(gen, schema=schema)
-
-
-def mjpeg_features(blob_df, every_n: int = 2):
-    """REAL demux + decode: one feature row per SAMPLED frame (exact gray
-    sums; unsampled frames are seeked over, never decoded)."""
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("sum_gray", LongType()),
-        ]
-    )
-
-    def feats(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                _mjpeg_feature_rows(pdf["doc_id"], pdf["payload"], every_n)
-            )
-
-    return blob_df.select("doc_id", "payload").mapInPandas(feats, schema=schema)

@@ -1,16 +1,12 @@
-"""MLlib-backed LSH variants (SURVEY.md §2.1 last row names MinHashLSH /
-BucketedRandomProjectionLSH as the library path).
+"""MLlib-backed LSH (SURVEY.md §2.1 last row names MinHashLSH as the
+library path).
 
-These wrap spark.ml's fitted-model LSH: JVM-side, battle-tested banding —
-the off-the-shelf alternative to the md5-portable implementations in
-operators/dedup.py / operators/similarity.py. Model hashes are seeded but
-use Spark-internal hash families a SQL oracle can't reproduce, so queries
-built on these are rows-only checked; tests validate them against the
-exact operators instead (tests/test_mllib_lsh.py).
-
-The kNN wrapper chooses its own execution shape by |Q|: one distributed
-``approxSimilarityJoin`` for anything beyond a small threshold, the
-per-key ``approxNearestNeighbors`` API only in the tiny-|Q| regime.
+This wraps spark.ml's fitted-model MinHashLSH: JVM-side, battle-tested
+banding — the off-the-shelf alternative to the md5-portable
+implementation in operators/dedup.py. Model hashes are seeded but use
+Spark-internal hash families a SQL oracle can't reproduce, so the query
+built on it is rows-only checked; tests validate it against the exact
+operator instead (tests/test_mllib_lsh.py).
 """
 
 from __future__ import annotations
@@ -58,91 +54,3 @@ def minhash_neardup_pairs_ml(
             F.col("jaccard_distance"),
         )
     )
-
-
-def knn_random_projection_ml(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-    radius: float = 2.0,
-    collect_threshold: int = 32,
-) -> DataFrame:
-    """ANN neighbors via BucketedRandomProjectionLSH (euclidean).
-
-    The wrapper picks the execution shape itself — callers never get a
-    driver-side loop by accident:
-
-    - ``|Q| <= collect_threshold``: per-key ``approxNearestNeighbors``
-      (exact top-k semantics per query; one small job per vector — the
-      broadcast-side regime where that is cheapest).
-    - larger ``|Q|``: ONE distributed ``approxSimilarityJoin`` within
-      ``radius``, then top-k per query via a partitioned rank window. The
-      join shuffles on LSH bucket keys only; no query vector ever passes
-      through the driver. ``radius`` bounds the candidate set — for
-      unit-normalized embeddings the default 2.0 covers the full range,
-      so the only approximation is the LSH bucketing itself (same as the
-      per-key path).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = emb.select(
-        "vec_id", array_to_vector(F.col("embedding")).alias("features")
-    )
-    brp = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = brp.fit(corpus)
-
-    if queries.limit(collect_threshold + 1).count() > collect_threshold:
-        from pyspark.sql import Window
-
-        qfeat = queries.select(
-            F.col("vec_id").alias("query_id"),
-            array_to_vector(F.col("embedding")).alias("features"),
-        )
-        joined = model.approxSimilarityJoin(
-            qfeat, corpus, radius, distCol="euclidean_dist"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("euclidean_dist"), F.asc("neighbor_id")
-        )
-        return (
-            joined.select(
-                F.col("datasetA.query_id").alias("query_id"),
-                F.col("datasetB.vec_id").alias("neighbor_id"),
-                F.col("euclidean_dist"),
-            )
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k)
-            .drop("__rk")
-        )
-
-    from pyspark.ml.linalg import Vectors
-
-    out = []
-    for row in queries.select("vec_id", "embedding").collect():
-        key = Vectors.dense([float(x) for x in row["embedding"]])
-        nn = (
-            model.approxNearestNeighbors(corpus, key, k + 1)
-            .where(F.col("vec_id") != row["vec_id"])
-            .limit(k)
-            .select(
-                F.lit(row["vec_id"]).cast("long").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("distCol").alias("euclidean_dist"),
-            )
-        )
-        out.append(nn)
-    result = out[0]
-    for df in out[1:]:
-        result = result.unionAll(df)
-    return result

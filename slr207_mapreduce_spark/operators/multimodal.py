@@ -11,10 +11,9 @@ baseline JPEG (operators/jpeg.py), PCM WAV, G.711 mu-law, P6 PPM, the RAWV
 frame container, and MJPEG-in-AVI all have from-spec encoders/decoders in
 this package, so feature extraction / resize / frame indexing run over
 genuine container bytes end-to-end (r08 VERDICT item 5 retired the last
-md5-derived stand-ins). External-library formats (e.g. PIL-backed ones)
-stay gated: ``decode_image`` raises NotImplementedError unless PIL is
-importable — swapping a library codec into any of the mapInPandas paths
-changes only the inner python function.
+md5-derived stand-ins). No external image library is used; swapping a
+library codec into any of the mapInPandas paths changes only the inner
+python function.
 """
 
 from __future__ import annotations
@@ -67,29 +66,6 @@ def with_blob_column(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.length(F.encode(F.col(text_col), "UTF-8")).cast("long").alias("n_bytes"),
         ).alias("meta"),
     )
-
-
-def _have_pil() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image(payload: bytes):
-    """Real image decode — requires PIL, absent in this container."""
-    if not _have_pil():
-        raise NotImplementedError(
-            "image decode needs PIL; this environment gates it — the "
-            "from-spec codecs (PPM/PNG/GIF/JPEG) cover the tested paths"
-        )
-    from io import BytesIO
-
-    from PIL import Image
-
-    return Image.open(BytesIO(payload))
 
 
 def ppm_image_features(blob_df: DataFrame) -> DataFrame:
@@ -955,7 +931,7 @@ FRAME_FEATURE_SCHEMA = StructType(
 
 
 def _frame_rows_from_cohort(doc_ids, buf, off, ln, every_n: int):
-    """Shared assembly for the vectorized frame-sample kernels: run the
+    """Row assembly for the vectorized frame-sample kernel: run the
     cohort demux, replay any handed-off stream through the scalar decoder
     (in row order, so the FIRST bad payload raises the same documented
     ValueError the scalar loop would), and merge to one frame table
@@ -1004,40 +980,13 @@ def _frame_rows_from_cohort(doc_ids, buf, off, ln, every_n: int):
     )
 
 
-def sampled_frame_features(blob_df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Parse each frame stream, decode every Nth frame ONLY, emit exact
-    per-frame channel sums — fan-out rows like a real frame extractor.
-    Demux + decode run cohort-vectorized over the whole Arrow batch;
-    irregular payloads replay through the scalar decoder, which owns the
-    documented ValueError contract."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf["payload"]]
-            ln = np.array([len(p) for p in payloads], dtype="int64")
-            off = np.zeros(len(payloads), dtype="int64")
-            np.cumsum(ln[:-1], out=off[1:])
-            buf = np.frombuffer(b"".join(payloads), dtype="uint8")
-            yield _frame_rows_from_cohort(
-                pdf["doc_id"].to_numpy(), buf, off, ln, every_n
-            )
-
-    return blob_df.select("doc_id", "payload").mapInPandas(
-        feats, schema=FRAME_FEATURE_SCHEMA
-    )
-
-
 def video_frame_sample_roundtrip_features(
     docs: DataFrame, every_n: int = 2
 ) -> DataFrame:
     """Fused write→read round-trip: synthesize each RAWV container, then
-    demux + decode every Nth frame in the SAME kernel. Row-identical to
-    ``sampled_frame_features(synth_video_blobs(docs), every_n)`` — the
-    chained benchmark shape shipped each container across the JVM boundary
-    three times (see jpeg.py's fused round-trips, r11); the real pipeline
-    surface stays the separate operators, which read blobs from storage.
+    demux + decode every Nth frame in the SAME kernel — a chained
+    synth-kernel → feature-kernel shape shipped each container across the
+    JVM boundary three times (see jpeg.py's fused round-trips, r11).
     Both halves run cohort-vectorized (r11b): the synthesized container
     bytes still exist in full and the demux/decode re-parses them from
     the buffer — parity with the scalar encode→iter_sampled_frames chain

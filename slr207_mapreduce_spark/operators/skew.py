@@ -113,21 +113,6 @@ def _parquet_row_group_parallelism(df: DataFrame) -> int | None:
         return None
 
 
-def explain_shuffles(df: DataFrame) -> int:
-    """Count data-shuffle Exchange nodes in the physical plan — the shuffle
-    budget a reviewer should check before running anything at scale.
-    BroadcastExchange is excluded: broadcasting a dim is the cheap
-    alternative to a shuffle, not a shuffle."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("simple")
-    plan = buf.getvalue()
-    return plan.count("Exchange") - plan.count("BroadcastExchange")
-
-
 def capped_sessions_segmented(
     events: DataFrame, gap_s: int = 1800, cap_s: int = 7200
 ) -> DataFrame:

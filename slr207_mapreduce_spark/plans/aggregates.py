@@ -1243,7 +1243,7 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- shared expression text (valid in BOTH Spark SQL and DuckDB) ---------
 
 # exact cents: l_extendedprice carries <=2 decimals; floor(x*100 + 0.5) is
-# the portable fixed-point bridge (functions/portable.py::int_units).
+# the portable fixed-point bridge (see q1_pricing_summary in plans/tpch.py).
 _CENTS = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
 
 _N_BUCKETS = 12

@@ -393,8 +393,8 @@ def multimodal_ppm_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 def multimodal_video_frame_sample_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # fused write->read kernel (r11): row-identical to
-    # sampled_frame_features(synth_video_blobs(d), every_n=2)
+    # fused write->read kernel (r11): synthesize, demux and decode in one
+    # mapInPandas, so each container never crosses the JVM boundary
     from slr207_mapreduce_spark.operators.multimodal import (
         video_frame_sample_roundtrip_features,
     )
@@ -442,10 +442,10 @@ def multimodal_video_frame_sample_roundtrip(
     tags=("multimodal", "codec"),
 )
 def multimodal_mjpeg_avi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused write->read kernel (r11): row-identical to
-    # mjpeg_features(synth_mjpeg_blobs(d), every_n=2) — the chained shape
-    # shipped every AVI payload across the JVM boundary three times, which
-    # at docs_sf10 cost more than both codec kernels combined
+    # fused write->read kernel (r11): a chained synth-kernel →
+    # feature-kernel shape shipped every AVI payload across the JVM
+    # boundary three times, which at docs_sf10 cost more than both codec
+    # kernels combined
     from slr207_mapreduce_spark.operators.jpeg import mjpeg_roundtrip_features
 
     d = load_table(spark, "documents", sf_dir)
@@ -623,9 +623,8 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "codec"),
 )
 def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused write->read kernel (r11): row-identical to
-    # jpeg_features(synth_jpeg_blobs(d)) without the benchmark-only double
-    # JVM payload crossing
+    # fused write->read kernel (r11): encode and decode in one
+    # mapInPandas, with no JVM payload crossing in between
     from slr207_mapreduce_spark.operators.jpeg import jpeg_roundtrip_features
 
     d = load_table(spark, "documents", sf_dir)
@@ -698,8 +697,8 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "codec"),
 )
 def multimodal_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused write->read kernel (r11), row-identical to
-    # jpeg_color_features(synth_jpeg_color_blobs(d))
+    # fused write->read kernel (r11): encode and decode in one
+    # mapInPandas, with no JVM payload crossing in between
     from slr207_mapreduce_spark.operators.jpeg import (
         jpeg_color_roundtrip_features,
     )

@@ -27,3 +27,16 @@ def spark():
     )
     yield spark
 
+
+def explain_shuffles(df) -> int:
+    """Count data-shuffle Exchange nodes in the physical plan.
+    BroadcastExchange is excluded: broadcasting a dim is the cheap
+    alternative to a shuffle, not a shuffle."""
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("simple")
+    plan = buf.getvalue()
+    return plan.count("Exchange") - plan.count("BroadcastExchange")

@@ -233,17 +233,17 @@ def test_release_result_frees_final_checkpoint(spark):
     the global count is perturbed by other tests in the shared session and
     by the async ContextCleaner, which made the strict-equality form of this
     test order-dependent (red in full-suite runs, green alone)."""
+    from slr207_mapreduce_spark.internal import spark_private
     from slr207_mapreduce_spark.operators.graph import (
         connected_components,
         release_result,
-        result_checkpoint_ids,
     )
 
     sc = spark.sparkContext
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["src", "dst"])
     result = connected_components(edges)
     result.write.mode("overwrite").format("noop").save()
-    ids = result_checkpoint_ids(result)
+    ids = spark_private.logical_rdd_leaf_ids(result)
     assert ids, "result frame should pin at least one localCheckpoint block"
     assert ids <= _pinned_rdd_ids(sc), "result blocks must be pinned pre-release"
     release_result(result)
@@ -302,14 +302,11 @@ def test_private_api_surface_shape(spark):
         del df
 
 
-def test_missing_private_api_degrades_to_bounded_leak(spark):
-    """If the private surface disappears (Spark upgrade / Connect), the
-    release machinery must degrade to the documented bounded leak — keep
-    blocks pinned — never crash and never free unowned blocks."""
-    from slr207_mapreduce_spark.operators.graph import (
-        release_result,
-        result_checkpoint_ids,
-    )
+def test_changed_private_surface_raises(spark):
+    """If the private surface changes (Spark upgrade / Connect), the
+    release path raises instead of silently leaving checkpoint blocks
+    pinned for the session."""
+    from slr207_mapreduce_spark.operators.graph import release_result
 
     class _Broken:
         """Duck-typed frame whose private handle raises (simulates a
@@ -321,17 +318,8 @@ def test_missing_private_api_degrades_to_bounded_leak(spark):
         def _jdf(self):
             raise AttributeError("queryExecution surface changed")
 
-    broken = _Broken()
-    assert result_checkpoint_ids(broken) == set()
-    release_result(broken)  # must not raise
-
-    # and a real bystander checkpoint survives the degraded path
-    bystander = spark.range(10).localCheckpoint(eager=True)
-    before = result_checkpoint_ids(bystander)
-    assert before
-    release_result(broken)
-    assert before <= _pinned_rdd_ids(spark.sparkContext)
-    release_result(bystander)
+    with pytest.raises(AttributeError):
+        release_result(_Broken())
 
 
 def test_bfs_distances_hand_graph(spark):
@@ -397,55 +385,27 @@ def test_checkpointing_queries_pin_only_their_result(spark):
 
 def test_private_api_adapter_probe_and_degradation(spark):
     """internal/spark_private is the one module allowed to touch Spark
-    private handles. Pin (a) the capability probe passes on THIS Spark
-    build (the version-pin that used to live implicitly in graph.py), and
-    (b) when the probe reports incapable, every adapter degrades to the
-    bounded-leak contract: empty ids, no-op release, no exceptions."""
+    private handles. Pin the Spark minor it was validated against and its
+    two adapters on THIS build: a fresh checkpoint yields exactly one id,
+    the same id comes through a projection, and unpersist frees it."""
     from slr207_mapreduce_spark.internal import spark_private as sp
 
-    report = sp.probe_report(spark)
-    assert report["capable"], (
-        f"private checkpoint-release surface probe failed on Spark "
-        f"{report['spark_version']} — the graph operators are now on the "
-        "bounded-leak path; update internal/spark_private.py for this version"
-    )
     # Version pin (r07 verdict item 7): a Spark minor bump must fail HERE,
-    # by name, before anyone debugs a silent bounded-leak fallback. On a
-    # legitimate upgrade: re-run this test (the probe exercises the full
-    # private surface) and append the new minor to VALIDATED_SPARK_MINORS.
-    assert report["validated_minor"], (
-        f"Spark {report['spark_version']} is not in "
-        f"VALIDATED_SPARK_MINORS={sp.VALIDATED_SPARK_MINORS} — re-validate "
+    # by name, before anyone debugs a changed private surface. On a
+    # legitimate upgrade: run this test file against the new build and
+    # extend the pin.
+    minor = ".".join(spark.version.split(".")[:2])
+    assert minor == "4.1", (
+        f"Spark {spark.version} is not a validated minor — re-validate "
         "internal/spark_private.py against this build and extend the pin"
     )
     ck = spark.range(3).localCheckpoint(eager=True)
-    ids = sp.checkpointed_rdd_id(ck)
+    ids = sp.logical_rdd_leaf_ids(ck)
     assert len(ids) == 1
     assert sp.logical_rdd_leaf_ids(ck.select((F.col("id") * 2).alias("x"))) == ids
+    assert ids <= _pinned_rdd_ids(spark.sparkContext)
     sp.unpersist_rdd_ids(spark.sparkContext, ids)
-
-    # simulate an incompatible build: all adapters must degrade, not raise.
-    # The verdict cache is keyed per session (r06 ADVICE), so poisoning
-    # this session's entry must not require touching a process global.
-    try:
-        sp._CAPABLE[spark] = False
-        ck2 = spark.range(2).localCheckpoint(eager=True)
-        assert sp.checkpointed_rdd_id(ck2) == set()
-        assert sp.logical_rdd_leaf_ids(ck2) == set()
-        sp.unpersist_rdd_ids(spark.sparkContext, set())  # no-op, no raise
-        # the operators still produce CORRECT results on the degraded path
-        from slr207_mapreduce_spark.operators.graph import connected_components
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "src long, dst long"
-        )
-        got = {
-            (r["node"], r["cluster_id"])
-            for r in connected_components(edges).collect()
-        }
-        assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    finally:
-        sp._CAPABLE.pop(spark, None)
+    assert not (ids & _pinned_rdd_ids(spark.sparkContext))
 
 
 def test_connected_components_rounds_flat_under_replication(spark):

@@ -285,7 +285,7 @@ def test_jpeg_color_rejects_and_gray_interop():
 
 
 # --- vectorized entropy coder bit-parity (r10, VERDICT r09 item 5) --------
-# The encoders now run one vectorized _entropy_encode_blocks pass; the
+# The encoders now run one vectorized _entropy_encode_images pass; the
 # retired per-coefficient loop (_BitWriter + _emit_block) stays in the
 # module as the REFERENCE implementation, and this test pins byte
 # equality of whole JPEG streams across image classes (smooth DC-only,

@@ -358,34 +358,6 @@ def test_bfs_distances_match_bruteforce_random(spark):
     assert got == dist
 
 
-def test_write_zordered_sink_helper(spark, tmp_path):
-    """The first-class z-order sink produces the same tight-span layout the
-    inline recipe does, and round-trips all rows."""
-    from slr207_mapreduce_spark.sources.sinks import write_zordered
-    from slr207_mapreduce_spark.sources.tables import load_table
-
-    li = load_table(spark, "lineitem", SF_SMOKE).select(
-        "l_orderkey", "l_partkey", "l_linenumber"
-    )
-    p = str(tmp_path / "li_zsink")
-    write_zordered(li, p, "l_partkey", "l_orderkey", n_files=8)
-    back = spark.read.parquet(p)
-    assert back.count() == li.count()
-    assert set(back.columns) == set(li.columns)  # helper column dropped
-    clamp_a = F.least(F.greatest(F.col("l_partkey"), F.lit(0)), F.lit(1023))
-    clamp_b = F.least(F.greatest(F.col("l_orderkey"), F.lit(0)), F.lit(1023))
-    spans = (
-        back.groupBy(F.input_file_name())
-        .agg(
-            (F.max(clamp_a) - F.min(clamp_a)).alias("pa"),
-            (F.max(clamp_b) - F.min(clamp_b)).alias("pb"),
-        )
-        .agg(F.avg("pa").alias("pa"), F.avg("pb").alias("pb"))
-        .collect()[0]
-    )
-    assert spans["pa"] < 0.6 * 1023 and spans["pb"] < 0.6 * 1023, spans
-
-
 def test_write_zordered_clamps_instead_of_wrapping(spark, tmp_path):
     """Out-of-range z-order dims CLAMP to the boundary cell (monotone)
     rather than wrapping with % — value v and v + 2^bits must never share

@@ -1,8 +1,6 @@
-"""MLlib LSH variants validated against the exact/portable operators."""
+"""MLlib MinHashLSH validated against the exact operator."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
@@ -48,43 +46,3 @@ def test_mllib_minhash_candidates_are_similar_docs(spark):
             r["doc_b"],
             true_j,
         )
-
-
-def test_mllib_brp_knn_beats_random(spark):
-    from slr207_mapreduce_spark.operators.mllib_lsh import knn_random_projection_ml
-    from slr207_mapreduce_spark.operators.similarity import knn_bruteforce
-    from slr207_mapreduce_spark.sources.tables import load_table
-
-    emb = load_table(spark, "embeddings", SF_SMOKE)
-    q = emb.where(F.col("vec_id") < 5)
-    approx = knn_random_projection_ml(emb, q, k=5).collect()
-    assert {r["query_id"] for r in approx} == {0, 1, 2, 3, 4}
-    # euclidean distances must be sane (positive, finite) and per-query
-    # sorted output achievable
-    assert all(r["euclidean_dist"] > 0 for r in approx)
-
-
-def test_mllib_brp_large_query_set_is_one_distributed_join(spark):
-    """|Q|=500 must route through approxSimilarityJoin: ONE distributed
-    join + a partitioned top-k window — not 500 per-key driver-loop jobs
-    (whose plan would be a 500-way Union of separate approxNearestNeighbors
-    results)."""
-    from slr207_mapreduce_spark.operators.mllib_lsh import knn_random_projection_ml
-    from slr207_mapreduce_spark.sources.tables import load_table
-
-    emb = load_table(spark, "embeddings", SF_SMOKE)
-    import contextlib
-    import io
-
-    out = knn_random_projection_ml(emb, emb, k=3)  # all 500 vectors as queries
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("simple")
-    assert "Union" not in buf.getvalue(), "large |Q| fell back to the per-key loop"
-    rows = out.collect()
-    per_q: dict[int, list[float]] = {}
-    for r in rows:
-        assert r["query_id"] != r["neighbor_id"]
-        per_q.setdefault(r["query_id"], []).append(r["euclidean_dist"])
-    assert len(per_q) > 400  # LSH may miss a few queries, never most
-    assert all(len(v) <= 3 for v in per_q.values())

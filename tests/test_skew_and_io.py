@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, explain_shuffles
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -80,7 +80,6 @@ def test_partitioned_parquet_write_prunes(spark, tmp_path):
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
     """Co-located bucketed tables must join with ZERO exchanges — the
     repeated-join-key pattern that saves the fact-table shuffle at 100 TB."""
-    from slr207_mapreduce_spark.operators.skew import explain_shuffles
     from slr207_mapreduce_spark.sources.tables import load_table
     from slr207_mapreduce_spark.sources.sinks import write_table
 
@@ -109,7 +108,6 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
 
 
 def test_explain_shuffles_counts_exchanges(spark):
-    from slr207_mapreduce_spark.operators.skew import explain_shuffles
     from slr207_mapreduce_spark.sources.tables import load_table
 
     l = load_table(spark, "lineitem", SF_SMOKE)
@@ -186,7 +184,6 @@ def test_bucketed_band_table_joins_without_corpus_shuffle(spark):
         lsh_bands,
         minhash_signatures,
     )
-    from slr207_mapreduce_spark.operators.skew import explain_shuffles
     from slr207_mapreduce_spark.sources.sinks import write_table
     from slr207_mapreduce_spark.sources.tables import load_table
 
